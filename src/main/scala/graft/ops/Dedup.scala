@@ -1848,6 +1848,13 @@ object Dedup {
     * floor (`Round15OpsSpec`). */
   val SemanticSubSplitFloor: Long = 128L
 
+  /** Scaled semantic dedup with the default [[SemanticSubSplitFloor]].
+    *
+    * Building the DataFrame runs Spark jobs (either overload): the
+    * codebook training and cluster assignment on first use in a
+    * session, a `count()` of the vectors for the cap, and a `.head()`
+    * of the largest under-cap cluster size that picks the split
+    * branch. */
   def semanticScaled(spark: SparkSession, dir: String,
       mult: Double): DataFrame =
     semanticScaled(spark, dir, mult, SemanticSubSplitFloor)
@@ -2047,6 +2054,9 @@ object Dedup {
     * rescanning stored documents. */
   val MinEstSim = 0.5
 
+  /** The doc_id floor of the fixture's new-increment split.  Runs a
+    * Spark job (`.head()` of max(doc_id)) on first use in a session;
+    * later calls read the session memo. */
   private def incrementalSplitId(spark: SparkSession, dir: String): Long =
     RelationCache.cachedScalar(spark, s"dedup_split:$dir") {
       import org.apache.spark.sql.functions._
@@ -2059,7 +2069,9 @@ object Dedup {
 
   /** Fingerprint-keyed store path for the corpus signature index —
     * `indexStorePath`'s discipline (count + max key in the name, so a
-    * regenerated corpus gets a fresh store). */
+    * regenerated corpus gets a fresh store).  Runs a Spark job on every
+    * call: the fingerprint is a `.head()` of count + max(doc_id) over
+    * `corpus`. */
   private def sigStorePath(spark: SparkSession, dir: String,
       storeBase: Option[String], corpus: DataFrame,
       splitId: Long): org.apache.hadoop.fs.Path = {

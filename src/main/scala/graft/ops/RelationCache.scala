@@ -5,7 +5,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped memo for cached derived relations (SimHash pair
-  * graph, MinHash gram/signature tables, normalized embeddings).
+  * graph, MinHash gram/signature tables, normalized embeddings), for
+  * small driver-side values derived from them (codebooks, split ids)
+  * and for the resolved fixture relations `graft.Tables` serves.
   *
   * Why not rely on Spark's CacheManager alone: every call that builds
   * the same plan and `.cache()`s it again creates a fresh DataFrame,
@@ -137,11 +139,14 @@ object RelationCache {
     new ConcurrentHashMap[(SparkSession, String), org.apache.spark.rdd.RDD[_]]()
 
   /** Session-scoped memo for small driver-side values DERIVED from the
-    * cached relations (trained k-means codebooks, …), released by the
+    * cached relations (trained k-means codebooks, …) and for the
+    * resolved fixture relations of `graft.Tables.load` (an analyzed
+    * parquet `LogicalRelation`, no cached data), released by the
     * same `clear` / shutdown paths as the relations themselves — so
     * the documented refresh hook for a regenerated dataset (`clear`)
     * also invalidates derived scalar state instead of leaving a stale
-    * codebook behind a fresh relation. */
+    * codebook behind a fresh relation.  A build that throws memoizes
+    * nothing. */
   def cachedScalar[T <: AnyRef](spark: SparkSession, key: String)
       (build: => T): T = {
     hookShutdown(spark)

@@ -125,7 +125,11 @@ object RelationalExt {
 
   /** Q8-style market share: NATION_1 suppliers' share of ECONOMY-part
     * revenue sold into AMERICA customers, by order year — a conditional
-    * ratio over a six-way star join. */
+    * ratio over a six-way star join.
+    *
+    * Building the DataFrame runs Spark jobs: two driver-side
+    * `collect()`s fold the AMERICA nation keys and NATION_1's key set
+    * into literal `isin` probes before the returned plan exists. */
   def q8MarketShare(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val part = Tables.part(spark, dir)

@@ -54,6 +54,45 @@ class TablesEventsSpec extends SparkSuite {
     assert(ua === ub && ua % 1000000L === 123456L)
   }
 
+  /** An events file whose `ts` is a real TIMESTAMP(NANOS) column —
+    * Spark cannot write one, so it goes through parquet's own writer. */
+  private def writeNanosEvents(dir: String, nanos: Long): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  optional int64 event_id;
+        |  optional int64 ts (TIMESTAMP(NANOS,false));
+        |  optional int64 user_id;
+        |}""".stripMargin)
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", nanos).append("user_id", 10L))
+    finally writer.close()
+  }
+
+  test("a nanos events load memoized under nanosAsLong=true is not " +
+      "served once the session turns the conf off") {
+    val dir = Files.createTempDirectory("events_nanos_conf").toString
+    val micros = java.time.Instant.parse("2024-01-15T12:00:00.123456Z")
+    writeNanosEvents(dir,
+      micros.getEpochSecond * 1000000000L + micros.getNano)
+    val conf = "spark.sql.legacy.parquet.nanosAsLong"
+    val ev = Tables.events(spark, dir)
+    assert(ev.schema("ts").dataType === TimestampType)
+    assert(ev.select(unix_micros(col("ts"))).head.getLong(0) % 1000000L ===
+      123456L)
+    spark.conf.set(conf, "false")
+    try {
+      val e = intercept[IllegalStateException](Tables.events(spark, dir))
+      assert(e.getMessage.contains(
+        "must set spark.sql.legacy.parquet.nanosAsLong"), e.getMessage)
+    } finally spark.conf.set(conf, "true")
+  }
+
   /** Copy the single part file of a staged write to `dir/events_<n>.parquet`
     * so it matches readEvents' `events*.parquet` leaf-file glob. */
   private def stageFlat(stagedDir: String, dir: String, name: String): Unit = {
