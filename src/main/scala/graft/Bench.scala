@@ -53,23 +53,21 @@ object Bench {
     // per-query rows below are pure serve cost.  ~0s = the store was
     // already published (build-if-absent).  Excluded from the query
     // total; reported separately in the artifact.
-    val buildTimes =
-      (if (wanted.isEmpty) SparkEntry.builds.toSeq.sortBy(_._1) else Nil)
-        // skip builds none of the included queries can consume (an
-        // EXCLUDE-filtered smoke of one text query must not pay the
-        // k-means training — ~20 min at the 100x fixture)
-        .filter { case (name, _) =>
-          SparkEntry.buildConsumers.get(name)
-            .forall(pred => queries.keys.exists(pred)) }
-        .map { case (name, fn) =>
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] build $name failed: " +
-              s"${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
-          name -> (System.nanoTime() - t0) / 1e9
+    // Only the builds the selected queries need run, whichever filter
+    // selected them (a filtered smoke of one text query must not pay
+    // the k-means training — ~20 min at the 100x fixture).
+    val buildTimes = SparkEntry.registry
+      .filter(q => queries.contains(q.name)).flatMap(_.needs).distinct
+      .sortBy(_.name)
+      .map { b =>
+        val t0 = System.nanoTime()
+        try b.run(spark, sfDir)
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] build ${b.name} failed: " +
+            s"${e.getClass.getSimpleName}: ${e.getMessage}")
         }
+        b.name -> (System.nanoTime() - t0) / 1e9
+      }
     val buildsJson = buildTimes
       .map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
       .mkString("{", ",", "}")
@@ -192,17 +190,8 @@ object Bench {
       names: Set[String]): Option[(Double, Int, Map[String, Double])] =
     if (sys.env.get("SPARK_GRAFT_BASELINE").contains("0")) None
     else scala.util.Try {
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      val oracle = SparkEntry.oracleSql.view.filterKeys(names)
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      val oracle =
+        Verify.oracleJson(SparkEntry.oracleSql.view.filterKeys(names))
       val dir = java.nio.file.Files.createTempDirectory("graft_baseline")
       val oPath = dir.resolve("oracle_sql.json")
       java.nio.file.Files.writeString(oPath, oracle)

@@ -977,7 +977,7 @@ object Dedup {
     * (ia, ib, na, nb, shared) — candidate pairs post-blocking, orders
     * of magnitude smaller than the posting-join intermediates. */
   /** Force the shared capped candidate-pair relation for `dir` —
-    * registered in `SparkEntry.builds` so bench artifacts price the
+    * the `SharedGramPairs` `SparkEntry.Build`, so bench artifacts price the
     * posting self-join as its own labeled line instead of silently
     * attributing it to whichever consumer runs first alphabetically
     * (at the 100× fixture the pair build is ~100 s; the consumers'
@@ -1087,7 +1087,7 @@ object Dedup {
     * with a near-dup in train is evaluation contamination the
     * benchmark-overlap check (`text_contamination`) cannot see.
     * Consumes the cached capped pair relation (a projection — the
-    * posting join is already priced by `SparkEntry.builds`) and the
+    * posting join is already priced by the `SharedGramPairs` build) and the
     * exact splitter of `text_sample_split` (`TextAnalysis.splitCase` —
     * one definition, audit and splitter cannot drift).  Split pairs
     * are reported as unordered categories (least/greatest), with each
@@ -1160,7 +1160,7 @@ object Dedup {
     *
     * Scale: a projection over the SAME session-cached capped pair
     * relation the jaccard/containment/leakage queries consume (the
-    * posting join is priced once by `SparkEntry.builds`), then two
+    * posting join is priced once by the `SharedGramPairs` build), then two
     * map-side-combining aggregates.  The degree-0 row comes from a
     * COUNT subtraction, not a left join of the full corpus against
     * the (tiny) degree relation — at 100 TB that join would shuffle
@@ -1740,7 +1740,7 @@ object Dedup {
     * for.
     *
     * SCALE CAVEAT: this fixed-k variant is the documented simple
-    * oracle baseline (registered in `SparkEntry.scaleBaselines`,
+    * oracle baseline (flagged `baseline` in `SparkEntry.registry`,
     * default-excluded from large-scale smokes).  With k constant,
     * cluster population grows ~n/k and the within-cluster pair join
     * ~n²/k — quadratic.  The 100 TB form is `semanticScaled` below:

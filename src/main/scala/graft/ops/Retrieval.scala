@@ -985,8 +985,8 @@ object Retrieval {
         s"WITH ${lexRankCtes(SparkDialect)} SELECT qid, nid, lrank FROM ltop")
     }
 
-  /** Force the shared lexical rank relation — registered in
-    * `SparkEntry.builds` so the tokenize → idf → MLT-pick → posting
+  /** Force the shared lexical rank relation — the `HybridLexRank`
+    * `SparkEntry.Build`, so the tokenize → idf → MLT-pick → posting
     * join → window chain is priced as its own labeled bench line
     * (deliberately NOT forcing the ANN-side relations here: those
     * depend on the k-means stores, which have their own build line).
@@ -995,8 +995,8 @@ object Retrieval {
     lexTop(spark, dir).count(); ()
   }
 
-  /** SCALE CAVEAT: documented brute-force baseline (registered in
-    * `SparkEntry.scaleBaselines`, default-excluded from large-scale
+  /** SCALE CAVEAT: documented brute-force baseline (flagged `baseline`
+    * in `SparkEntry.registry`, default-excluded from large-scale
     * smokes) — the vector modality scores every (query, doc) pair
     * exactly.  The 100 TB forms are `hybridRrfAnn` /
     * `hybridRrfAnnScaled` below: identical fusion arithmetic, vector

@@ -155,8 +155,8 @@ object Similarity {
     * SCALE CAVEAT: the band space is FIXED (4 bands × 16 buckets), so
     * bucket population grows ∝ n and the band self-join degrades
     * superlinearly (measured 1.30/decade, SCALING.md) — this variant
-    * is the small-corpus / grid-contrast form, registered in
-    * `SparkEntry.scaleBaselines`.  The 100 TB paths are
+    * is the small-corpus / grid-contrast form, flagged `baseline` in
+    * `SparkEntry.registry`.  The 100 TB paths are
     * `annLshScaledSql` below (corpus-scaled band width, ~constant
     * bucket occupancy) and the IVF family (`sim_ivf_kmeans_scaled`). */
   def annLshSql(d: SqlDialect): String = {
@@ -1142,8 +1142,8 @@ object Similarity {
     * VARIANT's ranking; `n_true` < 5 queries normalize by the
     * matching IDCG partial sum.
     *
-    * Contains the all-pairs truth subquery BY DEFINITION → registered
-    * in `SparkEntry.scaleBaselines`; the `_sampled` twin below is the
+    * Contains the all-pairs truth subquery BY DEFINITION → flagged
+    * `baseline` in `SparkEntry.registry`; the `_sampled` twin below is the
     * scale path (√|Q| sampled truth, corpus-scaled variants).
     * Scale shape otherwise: truth is computed once (session cache)
     * and feeds both variant joins; each variant join is an equi-join
@@ -1826,8 +1826,8 @@ object Similarity {
     * and the two fixed-grid serving pipelines the full recall
     * harnesses score (`annLsh`, `quantizedTopK`).  All are registered
     * scale BASELINES — the 10×/100× smokes exclude every consumer, so
-    * `buildConsumers` skips this build there and the quadratic truth
-    * is never computed at scale. */
+    * no selected query `needs` this build there and the quadratic
+    * truth is never computed at scale. */
   def prebuildExactTruth(spark: SparkSession, dir: String): Unit = {
     exactTruth(spark, dir).count()
     annLsh(spark, dir).count()
@@ -2939,7 +2939,8 @@ object Similarity {
   // truncation every downstream action re-analyzes the pipeline's
   // multi-thousand-node plan on the driver (the dominant warm cost —
   // see RelationCache.materialized).  The one-time build cost is
-  // priced as labeled bench build lines (SparkEntry.builds).
+  // priced as a labeled bench build line (the `ExactTruthServes`
+  // `SparkEntry.Build` its consumers declare in `needs`).
   def topK(spark: SparkSession, dir: String): DataFrame =
     RelationCache.materialized(spark, s"serve_topk:$dir") {
       run(spark, dir, topKSql(SparkDialect))
