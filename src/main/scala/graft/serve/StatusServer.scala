@@ -27,13 +27,26 @@ import graft.streaming.RunStatusListener
   *    connection; the parity claim needs no poll≡reconnect argument.
   *  - `GET /summaries` — the per-asset A1 summary over the live store
   *    (what the reference publishes per asset to Pub/Sub).
+  *  - `GET /state_metrics` — the per-stateful-operator footprint of
+  *    the latest micro-batch (T6 observability).
   *
-  * Scale note: `/` and `/summaries` are aggregates (1 row / ~catalog
-  * rows).  `/snapshot` serializes bars and is capped at
-  * `snapshotLimit` rows with an explicit `truncated` flag — the
-  * reference's payload is "the last fetch, in RAM", inherently small;
-  * against a 100 TB store a snapshot endpoint must bound its own
-  * response rather than stream the table. */
+  * Which endpoints run Spark: only `/snapshot` (with each `/events`
+  * push, which carries its payload) and `/summaries`, because they
+  * read the bar store.  `/`, `/state_metrics` and the status part of
+  * `/snapshot` read the listener's in-memory snapshot once per request
+  * and format it with `RunStatusListener.statusJson`/`stateMetricsJson`
+  * (the bytes `statusDf`/`stateMetricsDf`'s `toJSON` would give), so
+  * a health check runs no job and never queues behind the ingest's
+  * jobs.  The state metrics are true per-batch counts: the ingest
+  * evaluates each micro-batch once.
+  *
+  * Scale note: `/` and `/state_metrics` are O(1) in the store size and
+  * `/summaries` is an aggregate (~catalog rows).  `/snapshot`
+  * serializes bars and is capped at `snapshotLimit` rows with an
+  * explicit `truncated` flag — the reference's payload is "the last
+  * fetch, in RAM", inherently small; against a 100 TB store a snapshot
+  * endpoint must bound its own response rather than stream the
+  * table. */
 final class StatusServer(spark: SparkSession, storeDir: String,
     listener: RunStatusListener, snapshotLimit: Int = 50000) {
 
@@ -128,8 +141,8 @@ final class StatusServer(spark: SparkSession, storeDir: String,
           (405, """{"error":"method not allowed"}""")
         else (200, body(ex))
       } catch {
-        case e: Throwable =>
-          (500, s"""{"error":${quote(String.valueOf(e.getMessage))}}""")
+        case e: Throwable => (500, RunStatusListener.jsonObject(
+          _.writeStringField("error", String.valueOf(e.getMessage))))
       }
     val bytes = payload.getBytes("UTF-8")
     ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -138,30 +151,23 @@ final class StatusServer(spark: SparkSession, storeDir: String,
     ex.close()
   }
 
-  private def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Status projection without bars + bars_count — ref `read_root`. */
   private def rootJson(): String = {
     val s = listener.snapshot
-    val status = listener.statusDf(spark).toJSON.collect().head
-    // statusDf carries bars_in_last_batch; the ref ALSO reports
-    // bars_count (len of the in-RAM list) — here, the last batch's
-    // landed rows, the same quantity
-    val statusWithCount =
-      status.stripSuffix("}") + s""","bars_count":${s.barsInLastBatch}}"""
-    s"""{"message":"graft historical data service is running",""" +
-      s""""latest_data_status":$statusWithCount}"""
+    RunStatusListener.jsonObject { g =>
+      g.writeStringField("message", "graft historical data service is running")
+      g.writeObjectFieldStart("latest_data_status")
+      RunStatusListener.writeStatusFields(g, s)
+      // the ref ALSO reports bars_count (len of the in-RAM list) — here,
+      // the last batch's landed rows, the same quantity
+      g.writeNumberField("bars_count", s.barsInLastBatch)
+      g.writeEndObject()
+    }
   }
 
   /** Full connect-push payload: status + the store's bars (capped). */
   private def snapshotJson(): String = {
-    val status = listener.statusDf(spark).toJSON.collect().head
+    val status = RunStatusListener.statusJson(listener.snapshot)
     val exists = {
       val p = new org.apache.hadoop.fs.Path(storeDir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -183,7 +189,7 @@ final class StatusServer(spark: SparkSession, storeDir: String,
     * observability — the watermark-sizing feedback loop); empty array
     * when the last query ran no stateful operators. */
   private def stateMetricsJson(): String =
-    listener.stateMetricsDf(spark).toJSON.collect()
+    RunStatusListener.stateMetricsJson(listener.snapshot)
       .mkString("{\"state_operators\":[", ",", "]}")
 
   /** Per-asset ingest summary over the live store (A1 shape). */

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
+import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -14,7 +15,17 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * The health projection (S7/P4/A3): the snapshot exposes counters and
   * the last error, never the heavy bar payload — and implements the
   * *intended* v1 semantics (real bar counts) rather than the v2 defect
-  * where `bars_count` is always 0 (SURVEY.md §0).
+  * where `bars_count` is always 0 (SURVEY.md §0).  A progress event
+  * that read no input (the no-data batch that evicts state at the end
+  * of each `AvailableNow` drain) advances the timestamps and batch
+  * count but keeps the last landed count.
+  *
+  * The snapshot lives in memory: `statusJson`/`stateMetricsJson`
+  * format it without a Spark job, byte-identical to the `toJSON` rows
+  * of the queryable `statusDf`/`stateMetricsDf`.  Its state metrics
+  * are true per-batch counts when the query evaluates each micro-batch
+  * once, as `StreamingIngest.start` does; Spark sums an operator's
+  * metrics over every re-run of a batch's plan.
   */
 object RunStatusListener {
   /** One stateful operator's footprint in the latest progress: the
@@ -35,6 +46,63 @@ object RunStatusListener {
       barsInLastBatch: Long,
       errorMessage: Option[String],
       stateOperators: Seq[StateMetric] = Seq.empty)
+
+  /** The 1-row health projection of `s` as a queryable DataFrame. */
+  def statusDf(spark: SparkSession, s: Snapshot): DataFrame = {
+    import spark.implicits._
+    Seq((s.lastAttemptTimestampUtc, s.lastSuccessTimestampUtc,
+      s.batchesCompleted, s.barsInLastBatch, s.errorMessage))
+      .toDF("last_attempt_timestamp_utc", "last_success_timestamp_utc",
+        "batches_completed", "bars_in_last_batch", "error_message")
+  }
+
+  /** One row per stateful operator of `s` as a queryable DataFrame. */
+  def stateMetricsDf(spark: SparkSession, s: Snapshot): DataFrame = {
+    import spark.implicits._
+    s.stateOperators
+      .map(m => (m.operatorName, m.stateRows, m.rowsUpdated,
+        m.rowsRemoved, m.memoryUsedBytes))
+      .toDF("operator_name", "state_rows", "rows_updated",
+        "rows_removed", "memory_used_bytes")
+  }
+
+  // Jackson is what Spark's `toJSON` writes with; the writers below
+  // follow its rules (schema field order, null fields omitted), so each
+  // string equals the matching DataFrame's `toJSON` row.
+  private val jsonFactory = new JsonFactory()
+
+  /** One JSON object whose fields `fill` writes. */
+  private[graft] def jsonObject(fill: JsonGenerator => Unit): String = {
+    val out = new java.io.StringWriter
+    val g = jsonFactory.createGenerator(out)
+    try { g.writeStartObject(); fill(g); g.writeEndObject() }
+    finally g.close()
+    out.toString
+  }
+
+  /** The fields of `statusDf`'s row, in its column order. */
+  private[graft] def writeStatusFields(g: JsonGenerator, s: Snapshot): Unit = {
+    s.lastAttemptTimestampUtc.foreach(
+      g.writeStringField("last_attempt_timestamp_utc", _))
+    s.lastSuccessTimestampUtc.foreach(
+      g.writeStringField("last_success_timestamp_utc", _))
+    g.writeNumberField("batches_completed", s.batchesCompleted)
+    g.writeNumberField("bars_in_last_batch", s.barsInLastBatch)
+    s.errorMessage.foreach(g.writeStringField("error_message", _))
+  }
+
+  /** `statusDf(spark, s).toJSON.collect().head`, from memory. */
+  def statusJson(s: Snapshot): String = jsonObject(writeStatusFields(_, s))
+
+  /** `stateMetricsDf(spark, s).toJSON.collect()`, from memory. */
+  def stateMetricsJson(s: Snapshot): Seq[String] =
+    s.stateOperators.map(m => jsonObject { g =>
+      Option(m.operatorName).foreach(g.writeStringField("operator_name", _))
+      g.writeNumberField("state_rows", m.stateRows)
+      g.writeNumberField("rows_updated", m.rowsUpdated)
+      g.writeNumberField("rows_removed", m.rowsRemoved)
+      g.writeNumberField("memory_used_bytes", m.memoryUsedBytes)
+    })
 }
 
 final class RunStatusListener extends StreamingQueryListener {
@@ -87,7 +155,10 @@ final class RunStatusListener extends StreamingQueryListener {
       lastAttemptTimestampUtc = Some(e.progress.timestamp),
       lastSuccessTimestampUtc = Some(e.progress.timestamp),
       batchesCompleted = s.batchesCompleted + 1,
-      barsInLastBatch = e.progress.numInputRows,
+      // a batch that read nothing landed nothing: keep the last count
+      barsInLastBatch =
+        if (e.progress.numInputRows > 0) e.progress.numInputRows
+        else s.barsInLastBatch,
       stateOperators = e.progress.stateOperators.toSeq.map(so =>
         RunStatusListener.StateMetric(so.operatorName, so.numRowsTotal,
           so.numRowsUpdated, so.numRowsRemoved, so.memoryUsedBytes))))
@@ -104,14 +175,8 @@ final class RunStatusListener extends StreamingQueryListener {
   def snapshot: Snapshot = state.get()
 
   /** The GET-/-style health projection as a queryable 1-row DataFrame. */
-  def statusDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val s = snapshot
-    Seq((s.lastAttemptTimestampUtc, s.lastSuccessTimestampUtc,
-      s.batchesCompleted, s.barsInLastBatch, s.errorMessage))
-      .toDF("last_attempt_timestamp_utc", "last_success_timestamp_utc",
-        "batches_completed", "bars_in_last_batch", "error_message")
-  }
+  def statusDf(spark: SparkSession): DataFrame =
+    RunStatusListener.statusDf(spark, snapshot)
 
   /** Per-stateful-operator metrics of the latest micro-batch as a
     * queryable table — one row per operator (dedup registry, windowed
@@ -120,12 +185,6 @@ final class RunStatusListener extends StreamingQueryListener {
     * feedback loop for sizing watermarks: a band-key count that grows
     * batch over batch means the horizon outlives the feed's actual
     * duplicate lag. */
-  def stateMetricsDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    snapshot.stateOperators
-      .map(m => (m.operatorName, m.stateRows, m.rowsUpdated,
-        m.rowsRemoved, m.memoryUsedBytes))
-      .toDF("operator_name", "state_rows", "rows_updated",
-        "rows_removed", "memory_used_bytes")
-  }
+  def stateMetricsDf(spark: SparkSession): DataFrame =
+    RunStatusListener.stateMetricsDf(spark, snapshot)
 }

@@ -195,6 +195,19 @@ object StreamingIngest {
     * schema) goes to `quarantineDir`/bars_structural rather than
     * throwing, so one malformed batch can never kill the query.
     *
+    * Both queries start from one `readEvents` stream (one schema probe
+    * per call); each still gets its own source and checkpoint.
+    *
+    * One evaluation per micro-batch: the `foreachBatch` body uses its
+    * batch several times (emptiness checks, the store merge's read and
+    * write, the summary publish), and every use of an unpersisted batch
+    * re-runs the stateful aggregation, state restore and save included,
+    * with Spark summing the operator's metrics over the re-runs.  So
+    * the body persists the batch, answers both emptiness checks with
+    * one `count_if` aggregate and unpersists at the end: the stateful
+    * stage runs once and the progress record reports true per-batch
+    * state metrics.
+    *
     * Returns the main query AND the quarantine query (when
     * `quarantineDir` is set) so callers can await/stop/observe both —
     * a dropped handle would leak a running stream whose failure
@@ -211,9 +224,9 @@ object StreamingIngest {
     val sinks: Seq[graft.ingest.EventSink] =
       eventsDir.map(new graft.ingest.EventSink.DatedFileSink(_)).toSeq ++
         eventSink
+    val events = readEvents(spark, srcDir)
     val quarantineQuery = quarantineDir.map { qd =>
-      val (_, rejects) =
-        Quarantine.split(readEvents(spark, srcDir), Quarantine.eventRules())
+      val (_, rejects) = Quarantine.split(events, Quarantine.eventRules())
       // foreachBatch append (not the streaming file sink): the sink is
       // then a plain dated parquet dir with no _spark_metadata log, so
       // SinkRetention.vacuum can drop aged partitions without
@@ -228,22 +241,27 @@ object StreamingIngest {
         }
         .start()
     }
-    val bars = streamingBars(readEvents(spark, srcDir), timeframe)
+    val bars = streamingBars(events, timeframe)
     bars.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Canonicalize.canonicalize(batch, timeframe) match {
+        batch.persist()
+        try Canonicalize.canonicalize(batch, timeframe) match {
           case Some(canonical) =>
-            quarantineDir.foreach { qd =>
-              val dropped = batch.filter(col("t").isNull)
-              if (!dropped.isEmpty)
-                graft.ingest.SinkRetention.appendDated(
-                  dropped.withColumn("reject_reason", lit("null_bucket"))
-                    .withColumn("batch_id", lit(batchId)), s"$qd/bars")
+            // canonicalize keeps exactly the rows with a non-null bucket
+            val counts = batch
+              .agg(count_if(col("t").isNull), count_if(col("t").isNotNull))
+              .head()
+            val (nullBucket, keyed) = (counts.getLong(0), counts.getLong(1))
+            if (nullBucket > 0) quarantineDir.foreach { qd =>
+              graft.ingest.SinkRetention.appendDated(
+                batch.filter(col("t").isNull)
+                  .withColumn("reject_reason", lit("null_bucket"))
+                  .withColumn("batch_id", lit(batchId)), s"$qd/bars")
             }
-            if (!canonical.isEmpty) {
+            if (keyed > 0) {
               BarStore.merge(canonical, storeDir)
               if (sinks.nonEmpty) {
                 val summaryEvents = graft.ingest.BarPipeline
@@ -259,7 +277,7 @@ object StreamingIngest {
                   .withColumn("batch_id", lit(batchId)),
                 s"$qd/bars_structural")
             }
-        }
+        } finally batch.unpersist()
       }
       .start() -> quarantineQuery
   }

@@ -1,6 +1,7 @@
 package graft.serve
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.{Serve, SparkSuite}
 import graft.ingest.{BarPipeline, BarStore}
 import graft.streaming.RunStatusListener
@@ -68,6 +69,72 @@ class ServeSpec extends SparkSuite {
       }
     } finally {
       server.stop()
+      spark.streams.removeListener(listener)
+    }
+  }
+
+  test("after a run, GET / reports the landed bars and status calls run no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val work = tmp("serve_nojob")
+    val listener = new RunStatusListener
+    // listeners see each event in turn, so once both queries' terminations
+    // (bars + quarantine) have arrived, every progress event has too
+    val terminated = new java.util.concurrent.atomic.AtomicInteger
+    val watcher = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.incrementAndGet()
+    }
+    spark.streams.addListener(listener)
+    spark.streams.addListener(watcher)
+    // job starts by job group; a marker job fences off earlier events
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobGroups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def await(what: String)(cond: => Boolean): Unit = {
+      val deadline = System.currentTimeMillis() + 30000
+      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(cond, s"timed out waiting for $what")
+    }
+    def marker(tag: String): Unit = {
+      spark.sparkContext.setJobGroup(tag, tag)
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      await(s"marker job $tag")(jobGroups.contains(tag))
+    }
+    val server = new StatusServer(spark, s"$work/bars", listener)
+    val port = server.start()
+    try {
+      Serve.runOnce(spark, sf(), work)
+      await("both queries' termination events")(terminated.get() == 2)
+      val (code, root) = get(s"http://127.0.0.1:$port/")
+      assert(code == 200)
+      val barsCount = "\"bars_count\":(\\d+)".r.findFirstMatchIn(root)
+        .map(_.group(1).toLong)
+      // the run's last progress is the bar query's no-data eviction
+      // batch; it read nothing and must not reset the landed count
+      assert(barsCount.exists(_ > 0), root)
+
+      spark.sparkContext.addSparkListener(jobs)
+      marker("before")
+      (1 to 10).foreach { _ =>
+        assert(get(s"http://127.0.0.1:$port/")._1 == 200)
+        assert(get(s"http://127.0.0.1:$port/state_metrics")._1 == 200)
+      }
+      marker("after")
+      val between = jobGroups.asScala.toSeq
+        .dropWhile(_ != "before").dropWhile(_ == "before")
+        .takeWhile(_ != "after")
+      assert(between.isEmpty, s"status calls ran ${between.size} Spark jobs")
+    } finally {
+      server.stop()
+      spark.sparkContext.removeSparkListener(jobs)
+      spark.streams.removeListener(watcher)
       spark.streams.removeListener(listener)
     }
   }

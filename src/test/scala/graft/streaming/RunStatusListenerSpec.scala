@@ -79,4 +79,26 @@ class RunStatusListenerSpec extends SparkSuite {
       spark.streams.removeListener(listener)
     }
   }
+
+  test("in-memory status JSON is byte-identical to the DataFrame views' toJSON") {
+    import RunStatusListener.{Snapshot, StateMetric}
+    val empty = Snapshot(None, None, 0L, 0L, None)
+    // every escape class Jackson distinguishes: quote, backslash, the
+    // short control escapes, a \u escape, and non-ASCII kept as is
+    val full = Snapshot(Some("2024-01-02T03:04:05.678Z"),
+      Some("2024-01-02T03:04:05.999Z"), 7L, 1234L,
+      Some("bad \"quote\" \\ path\nline\ttab \u0001 caf\u00e9 \u6570\u636e"),
+      Seq(StateMetric("stateStoreSave", 150L, 3L, 2L, 40960L),
+        StateMetric("dedupeWithinWatermark", 0L, 0L, 0L, 0L)))
+    Seq(empty, full).foreach { s =>
+      val viaSpark = RunStatusListener.statusDf(spark, s).toJSON.collect()
+      assert(viaSpark.length == 1)
+      assert(RunStatusListener.statusJson(s) == viaSpark.head)
+      assert(RunStatusListener.stateMetricsJson(s) ==
+        RunStatusListener.stateMetricsDf(spark, s).toJSON.collect().toSeq)
+    }
+    // null fields are omitted, as Spark's toJSON omits them
+    assert(!RunStatusListener.statusJson(empty).contains("error_message"))
+    assert(RunStatusListener.stateMetricsJson(full).length == 2)
+  }
 }

@@ -38,6 +38,17 @@ class StreamingIngestSpec extends SparkSuite {
         .collect().toSet
       val batch = BarPipeline.canonicalBars(spark, sf()).collect().toSet
       assert(streamed === batch)
+      // one evaluation per micro-batch: the fixture spans 30 days, inside
+      // the 31-day eviction horizon, so after each batch (the data batch
+      // and the no-data eviction batch) the aggregation's live state is
+      // exactly one row per stored (symbol, day).  Spark sums the state
+      // operator's metrics over every re-run of the batch's plan, so a
+      // batch evaluated k times would report k times this.
+      val stateRows = q.recentProgress.toSeq
+        .map(p => (p.batchId, p.stateOperators.head.numRowsTotal))
+      assert(stateRows.nonEmpty &&
+        stateRows.forall { case (_, rows) => rows == streamed.size },
+        s"(batch, state rows) $stateRows for ${streamed.size} live keys")
       assert(listener.snapshot.batchesCompleted >= 1)
       assert(listener.snapshot.errorMessage.isEmpty)
       val status = listener.statusDf(spark).collect().head
