@@ -44,4 +44,18 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with the session conf `key` set to `value`, then put
+    * back the previous value (or unset the key if it had none), also
+    * when `body` throws. */
+  def withConf[T](spark: SparkSession, key: String, value: String)(
+      body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

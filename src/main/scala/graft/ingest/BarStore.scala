@@ -22,22 +22,26 @@ import org.apache.spark.sql.functions._
 object BarStore {
   val key: Seq[String] = Seq("symbol", "bar_key")
 
-  def upsert(bars: DataFrame, path: String): Unit = {
-    val spark = bars.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      bars
-        .dropDuplicates(key)
-        .withColumn("bar_date", to_date(col("timestamp")))
-        .repartition(col("bar_date"))
-        .write
-        .partitionBy("bar_date")
-        .mode(SaveMode.Overwrite)
+  /** Dynamic overwrite of the date partitions `bars` touches, keeping
+    * one row per key.  One exchange: `repartition(bar_date)` hash-
+    * partitions on the date, which already satisfies the dedup's
+    * grouping on (bar_date, symbol, bar_key), so no second shuffle is
+    * planned, and each date lands in one task (one file).  Grouping on
+    * (bar_date +: key) is grouping on `key`: `bar_key` fixes the
+    * timestamp to the second, so a key has one `bar_date`. */
+  def upsert(bars: DataFrame, path: String): Unit =
+    writeDates(bars.withColumn("bar_date", to_date(col("timestamp")))
+      .repartition(col("bar_date"))
+      .dropDuplicates("bar_date" +: key), path)
+
+  /** Overwrite the `bar_date` partitions present in `dated` with its
+    * rows, leaving every other partition alone. */
+  private def writeDates(dated: DataFrame, path: String): Unit =
+    graft.GraftSession.withConf(dated.sparkSession,
+        "spark.sql.sources.partitionOverwriteMode", "dynamic") {
+      dated.write.partitionBy("bar_date").mode(SaveMode.Overwrite)
         .parquet(path)
-    } finally prev.foreach(
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-  }
+    }
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -58,37 +62,42 @@ object BarStore {
     * `localCheckpoint` truncates the read lineage so Spark permits
     * overwriting the path being read.  (A transactional table format
     * would do this natively; this is the no-Delta equivalent,
-    * SURVEY.md §7.3.) */
+    * SURVEY.md §7.3.)
+    *
+    * Two jobs besides the read-back: one aggregate collects the touched
+    * dates, and the write runs one exchange.  The union is hash-
+    * partitioned on `bar_date` and then grouped on (bar_date, symbol,
+    * bar_key), which that partitioning satisfies, so the grouping adds
+    * no shuffle and each date is written by one task (one file).  The
+    * grouping equals grouping on `key`: `bar_date = to_date(timestamp)`
+    * and `bar_key` fixes `timestamp` to the second.  `max_by(…, pri)`
+    * keeps the batch's row over the stored one; two rows of one key in
+    * the batch tie, and one of them wins whole. */
   def merge(bars: DataFrame, path: String): Unit = {
     val spark = bars.sparkSession
-    val dated = bars.dropDuplicates(key)
-      .withColumn("bar_date", to_date(col("timestamp")))
     // Resolve through Hadoop's FileSystem — java.io.File is always
     // false for non-local URIs (hdfs://, s3a://), which would silently
     // degrade every merge to a key-clobbering upsert on such storage.
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hPath)) { upsert(bars, path); return }
-    val touched = dated.select("bar_date").distinct()
-      .collect().map(_.getDate(0)) // small: one row per touched date
+    val touched = bars.agg(collect_set(to_date(col("timestamp"))))
+      .head().getSeq[Any](0).toSeq // small: one value per touched date
     val existing = read(spark, path)
-      .filter(col("bar_date").isin(touched.toIndexedSeq: _*))
+      .filter(col("bar_date").isin(touched: _*))
       .localCheckpoint(true)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      dated.withColumn("pri", lit(1))
-        .unionByName(existing.withColumn("pri", lit(0))
-          .select(dated.columns.map(col).toIndexedSeq :+ col("pri"): _*))
-        .groupBy(key.map(col).toIndexedSeq: _*)
-        .agg(max_by(struct((dated.columns.filterNot(key.contains))
-          .map(col).toIndexedSeq: _*), col("pri")).as("r"))
-        .select(dated.columns.toIndexedSeq.map(c =>
-          if (key.contains(c)) col(c) else col(s"r.$c").as(c)): _*)
-        .repartition(col("bar_date"))
-        .write.partitionBy("bar_date").mode(SaveMode.Overwrite).parquet(path)
-    } finally prev.foreach(
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
+    val dated = bars.withColumn("bar_date", to_date(col("timestamp")))
+    val groupKey = "bar_date" +: key
+    writeDates(dated.withColumn("pri", lit(1))
+      .unionByName(existing.withColumn("pri", lit(0))
+        .select(dated.columns.map(col).toIndexedSeq :+ col("pri"): _*))
+      .repartition(col("bar_date"))
+      .groupBy(groupKey.map(col): _*)
+      .agg(max_by(struct(dated.columns.filterNot(groupKey.contains)
+        .map(col).toIndexedSeq: _*), col("pri")).as("r"))
+      .select(dated.columns.toIndexedSeq.map(c =>
+        if (groupKey.contains(c)) col(c) else col(s"r.$c").as(c)): _*),
+      path)
   }
 
   // ---------------------------------------------------------------

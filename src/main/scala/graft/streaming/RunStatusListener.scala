@@ -1,6 +1,8 @@
 package graft.streaming
 
+import java.util.UUID
 import java.util.concurrent.atomic.AtomicReference
+import scala.collection.immutable.VectorMap
 import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -16,9 +18,17 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * the last error, never the heavy bar payload — and implements the
   * *intended* v1 semantics (real bar counts) rather than the v2 defect
   * where `bars_count` is always 0 (SURVEY.md §0).  A progress event
-  * that read no input (the no-data batch that evicts state at the end
-  * of each `AvailableNow` drain) advances the timestamps and batch
-  * count but keeps the last landed count.
+  * that read no input (a no-data batch, which Spark runs when only the
+  * watermark moved; `StreamingIngest.start`'s bar query runs none)
+  * advances the timestamps and batch count but keeps the last landed
+  * count.
+  *
+  * State metrics are kept per query id: `stateOperators` is the union
+  * of each query's latest progress, in the order the queries first
+  * reported.  So a query without stateful operators (the ingest's
+  * quarantine query) reporting after the bar query does not blank the
+  * bar query's metrics.  The id is the one the checkpoint keeps, so a
+  * scheduled query restarted on its checkpoint replaces its own entry.
   *
   * The snapshot lives in memory: `statusJson`/`stateMetricsJson`
   * format it without a Spark job, byte-identical to the `toJSON` rows
@@ -106,9 +116,16 @@ object RunStatusListener {
 }
 
 final class RunStatusListener extends StreamingQueryListener {
-  import RunStatusListener.Snapshot
+  import RunStatusListener.{Snapshot, StateMetric}
 
-  private val state = new AtomicReference(Snapshot(None, None, 0L, 0L, None))
+  // the snapshot, paired with each query's latest state operators by
+  // query id (first-report order), whose union is its `stateOperators`
+  private val state = new AtomicReference((
+    Snapshot(None, None, 0L, 0L, None),
+    VectorMap.empty[UUID, Seq[StateMetric]]))
+
+  private def updateSnapshot(f: Snapshot => Snapshot): Unit =
+    state.updateAndGet { case (s, byQuery) => (f(s), byQuery) }
 
   // Change-notification channel for the push surface (StatusServer's
   // SSE endpoint): every status mutation bumps a version and wakes
@@ -146,40 +163,44 @@ final class RunStatusListener extends StreamingQueryListener {
 
   override def onQueryStarted(
       e: StreamingQueryListener.QueryStartedEvent): Unit =
-    state.updateAndGet(s => s.copy(
+    updateSnapshot(_.copy(
       lastAttemptTimestampUtc = Some(e.timestamp), errorMessage = None))
 
   override def onQueryProgress(
       e: StreamingQueryListener.QueryProgressEvent): Unit = {
-    state.updateAndGet(s => s.copy(
-      lastAttemptTimestampUtc = Some(e.progress.timestamp),
-      lastSuccessTimestampUtc = Some(e.progress.timestamp),
-      batchesCompleted = s.batchesCompleted + 1,
-      // a batch that read nothing landed nothing: keep the last count
-      barsInLastBatch =
-        if (e.progress.numInputRows > 0) e.progress.numInputRows
-        else s.barsInLastBatch,
-      stateOperators = e.progress.stateOperators.toSeq.map(so =>
-        RunStatusListener.StateMetric(so.operatorName, so.numRowsTotal,
-          so.numRowsUpdated, so.numRowsRemoved, so.memoryUsedBytes))))
+    val p = e.progress
+    val metrics = p.stateOperators.toSeq.map(so =>
+      StateMetric(so.operatorName, so.numRowsTotal, so.numRowsUpdated,
+        so.numRowsRemoved, so.memoryUsedBytes))
+    state.updateAndGet { case (s, byQuery) =>
+      val next = byQuery.updated(p.id, metrics)
+      (s.copy(
+        lastAttemptTimestampUtc = Some(p.timestamp),
+        lastSuccessTimestampUtc = Some(p.timestamp),
+        batchesCompleted = s.batchesCompleted + 1,
+        // a batch that read nothing landed nothing: keep the last count
+        barsInLastBatch =
+          if (p.numInputRows > 0) p.numInputRows else s.barsInLastBatch,
+        stateOperators = next.values.flatten.toSeq), next)
+    }
     bumpVersion()
   }
 
   override def onQueryTerminated(
       e: StreamingQueryListener.QueryTerminatedEvent): Unit =
     e.exception.foreach { msg =>
-      state.updateAndGet(s => s.copy(errorMessage = Some(msg)))
+      updateSnapshot(_.copy(errorMessage = Some(msg)))
       bumpVersion()
     }
 
-  def snapshot: Snapshot = state.get()
+  def snapshot: Snapshot = state.get()._1
 
   /** The GET-/-style health projection as a queryable 1-row DataFrame. */
   def statusDf(spark: SparkSession): DataFrame =
     RunStatusListener.statusDf(spark, snapshot)
 
-  /** Per-stateful-operator metrics of the latest micro-batch as a
-    * queryable table — one row per operator (dedup registry, windowed
+  /** Per-stateful-operator metrics of each query's latest micro-batch
+    * as a queryable table — one row per operator (dedup registry, windowed
     * aggregation, keyed detector …) with its live state row count,
     * per-batch update/eviction flow and memory footprint.  This is the
     * feedback loop for sizing watermarks: a band-key count that grows

@@ -208,6 +208,17 @@ object StreamingIngest {
     * stage runs once and the progress record reports true per-batch
     * state metrics.
     *
+    * No eviction-only micro-batch: the bar query starts with
+    * `spark.sql.streaming.noDataMicroBatches.enabled=false` (set for
+    * its `start()` only; the quarantine query and other streaming
+    * modules keep Spark's default).  Otherwise each `AvailableNow` drain
+    * ends with a batch that reads nothing and exists only because the
+    * watermark moved: it restores and commits the whole state store,
+    * and in update mode it emits no row.  Without it, the keys the
+    * moved watermark passes are evicted by the next data batch, which
+    * runs under the watermark the skipped batch would have used; live
+    * state stays bounded by the horizon plus one run.
+    *
     * Returns the main query AND the quarantine query (when
     * `quarantineDir` is set) so callers can await/stop/observe both —
     * a dropped handle would leak a running stream whose failure
@@ -242,7 +253,7 @@ object StreamingIngest {
         .start()
     }
     val bars = streamingBars(events, timeframe)
-    bars.writeStream
+    val barWriter = bars.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -279,6 +290,12 @@ object StreamingIngest {
             }
         } finally batch.unpersist()
       }
-      .start() -> quarantineQuery
+    // the query's session is cloned at start, so the setting binds this
+    // query alone; it is not pinned in the offset log either
+    val barQuery = graft.GraftSession.withConf(spark,
+      "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+      barWriter.start()
+    }
+    barQuery -> quarantineQuery
   }
 }

@@ -504,4 +504,63 @@ class PlanShapeSpec extends SparkSuite {
     assert(serveNodes.exists(_.nodeName.contains("TakeOrderedAndProject")),
       serveNodes.map(_.nodeName).distinct.mkString(","))
   }
+
+  /** The final (post-AQE) physical plans of the file writes `body`
+    * runs; waits for the first, since the listener bus delivers query
+    * executions asynchronously. */
+  private def writePlans(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    def writes = seen.toArray(Array.empty[SparkPlan]).toSeq
+      .filter(planSubtree(_).exists(_.isInstanceOf[DataWritingCommandExec]))
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.currentTimeMillis() + 20000
+      while (writes.isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      writes
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("bar store writes shuffle once and write one file per date") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    import graft.ingest.{BarPipeline, BarStore}
+    val dir = java.nio.file.Files.createTempDirectory("barplan").toString +
+      "/bars"
+    def shuffles(p: org.apache.spark.sql.execution.SparkPlan) =
+      planSubtree(p).count(_.isInstanceOf[ShuffleExchangeExec])
+    def filesPerDate = new java.io.File(dir).list()
+      .filter(_.startsWith("bar_date=")).sorted.map { d =>
+        d -> new java.io.File(dir, d).list()
+          .count(f => !f.startsWith("_") && !f.startsWith("."))
+      }.toSeq
+    // checkpointed input: the plans then hold only the writes' exchanges
+    val all = BarPipeline.canonicalBars(spark, sf()).localCheckpoint()
+    val bars = all.collect().toSet
+    Seq[(String, () => Unit)](
+      // the first write: dedup per key, one exchange
+      "upsert" -> (() => BarStore.upsert(all.union(all), dir)),
+      // a key-level merge of one symbol into every date it touches
+      "merge" -> (() => BarStore.merge(all.filter(col("symbol") === "click"),
+        dir))).foreach { case (write, run) =>
+      val plans = writePlans(run())
+      assert(plans.length == 1, s"$write ran ${plans.length} writes")
+      assert(shuffles(plans.head) == 1, s"$write plan:\n${plans.head}")
+      val files = filesPerDate
+      assert(files.nonEmpty && files.forall(_._2 == 1), s"$write: $files")
+      assert(BarStore.read(spark, dir).drop("bar_date").collect().toSet ==
+        bars, write)
+    }
+  }
 }

@@ -80,6 +80,53 @@ class RunStatusListenerSpec extends SparkSuite {
     }
   }
 
+  test("state metrics are kept per query, in either delivery order") {
+    import org.apache.spark.sql.streaming.ProgressEvents.{progress, stateOperator}
+    import RunStatusListener.StateMetric
+    // the ingest's two queries: the bar query holds the aggregation's
+    // state, the quarantine query holds none
+    val bar = java.util.UUID.randomUUID()
+    val quarantine = java.util.UUID.randomUUID()
+    def barBatch(batchId: Long, rows: Long) = progress(bar, batchId,
+      s"2024-01-0${batchId + 1}T00:00:00.000Z", 40L,
+      Seq(stateOperator("stateStoreSave", rows, rowsUpdated = 40L,
+        rowsRemoved = 3L, memoryBytes = 4096L)))
+    def quarantineBatch(batchId: Long) = progress(quarantine, batchId,
+      s"2024-01-0${batchId + 1}T00:00:01.000Z", 40L, Seq.empty)
+    def barMetric(rows: Long) =
+      Seq(StateMetric("stateStoreSave", rows, 40L, 3L, 4096L))
+
+    // (order, events, the bar query's state rows after each event)
+    val orders = Seq(
+      ("bar query first", Seq(barBatch(0, 120L), quarantineBatch(0),
+        barBatch(1, 160L), quarantineBatch(1)),
+        Seq(Some(120L), Some(120L), Some(160L), Some(160L))),
+      ("quarantine query first", Seq(quarantineBatch(0), barBatch(0, 120L),
+        quarantineBatch(1), barBatch(1, 160L)),
+        Seq(None, Some(120L), Some(120L), Some(160L))))
+    orders.foreach { case (order, events, barRows) =>
+      val listener = new RunStatusListener
+      events.zip(barRows).zipWithIndex.foreach { case ((e, rows), i) =>
+        listener.onQueryProgress(e)
+        val s = listener.snapshot
+        assert(s.batchesCompleted == i + 1, order)
+        assert(s.stateOperators == rows.toSeq.flatMap(barMetric),
+          s"$order, event $i")
+      }
+    }
+
+    // two stateful queries: the union, in first-report order, each query's
+    // later progress replacing only its own entry
+    val listener = new RunStatusListener
+    val other = java.util.UUID.randomUUID()
+    listener.onQueryProgress(barBatch(0, 120L))
+    listener.onQueryProgress(progress(other, 0L, "2024-01-01T00:00:02.000Z",
+      5L, Seq(stateOperator("dedupeWithinWatermark", 5L))))
+    listener.onQueryProgress(barBatch(1, 160L))
+    assert(listener.snapshot.stateOperators ==
+      barMetric(160L) :+ StateMetric("dedupeWithinWatermark", 5L, 0L, 0L, 0L))
+  }
+
   test("in-memory status JSON is byte-identical to the DataFrame views' toJSON") {
     import RunStatusListener.{Snapshot, StateMetric}
     val empty = Snapshot(None, None, 0L, 0L, None)

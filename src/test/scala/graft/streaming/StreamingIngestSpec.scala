@@ -14,6 +14,25 @@ class StreamingIngestSpec extends SparkSuite {
   private def tmp(tag: String) =
     Files.createTempDirectory(tag).toString
 
+  private def nanos(s: String): java.lang.Long =
+    java.sql.Timestamp.valueOf(s).getTime * 1000000L
+
+  private type RawEvent =
+    (Long, java.lang.Long, Long, String, Double, String)
+
+  /** Land `rows` in `src` as one events parquet file named `name`, the
+    * way a fetch drops a file for the next run to drain. */
+  private def addEventFile(src: String, name: String,
+      rows: Seq[RawEvent]): Unit = {
+    val staged = tmp("stage")
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("overwrite").parquet(staged)
+    val part = Files.list(java.nio.file.Paths.get(staged)).toArray
+      .map(_.toString).filter(_.endsWith(".parquet")).head
+    Files.copy(java.nio.file.Paths.get(part),
+      java.nio.file.Paths.get(src, name))
+  }
+
   test("streaming ingest lands the same canonical bars as batch") {
     val store = tmp("store") + "/bars"
     val ckpt = tmp("ckpt")
@@ -39,11 +58,11 @@ class StreamingIngestSpec extends SparkSuite {
       val batch = BarPipeline.canonicalBars(spark, sf()).collect().toSet
       assert(streamed === batch)
       // one evaluation per micro-batch: the fixture spans 30 days, inside
-      // the 31-day eviction horizon, so after each batch (the data batch
-      // and the no-data eviction batch) the aggregation's live state is
-      // exactly one row per stored (symbol, day).  Spark sums the state
-      // operator's metrics over every re-run of the batch's plan, so a
-      // batch evaluated k times would report k times this.
+      // the 31-day eviction horizon, so after each batch the
+      // aggregation's live state is exactly one row per stored
+      // (symbol, day).  Spark sums the state operator's metrics over
+      // every re-run of the batch's plan, so a batch evaluated k times
+      // would report k times this.
       val stateRows = q.recentProgress.toSeq
         .map(p => (p.batchId, p.stateOperators.head.numRowsTotal))
       assert(stateRows.nonEmpty &&
@@ -132,8 +151,6 @@ class StreamingIngestSpec extends SparkSuite {
     val src = tmp("qsrc")
     val store = tmp("qstore") + "/bars"
     val qd = tmp("quarantine")
-    def nanos(s: String): java.lang.Long =
-      java.sql.Timestamp.valueOf(s).getTime * 1000000L
     // raw feed: 2 valid ticks, one value-range violation (aggregates
     // into bars like batch — the quarantine is the monitoring copy),
     // one null-ts and one null-symbol tick (both absent from bars)
@@ -143,13 +160,7 @@ class StreamingIngestSpec extends SparkSuite {
       (3L, null.asInstanceOf[java.lang.Long], 7L, "AAA", 20.0, "{}"),
       (4L, nanos("2024-01-01 12:00:00"), 7L, null.asInstanceOf[String], 30.0, "{}"),
       (5L, nanos("2024-01-02 09:00:00"), 7L, "BBB", 50.0, "{}"))
-    val staged = tmp("qstage")
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(staged)
-    val part = Files.list(java.nio.file.Paths.get(staged)).toArray
-      .map(_.toString).filter(_.endsWith(".parquet")).head
-    Files.copy(java.nio.file.Paths.get(part),
-      java.nio.file.Paths.get(src, "events_custom.parquet"))
+    addEventFile(src, "events_custom.parquet", rows)
 
     val (q, qq) = StreamingIngest.start(spark, src, store, tmp("qckpt"),
       quarantineDir = Some(qd))
@@ -182,6 +193,56 @@ class StreamingIngestSpec extends SparkSuite {
       .collect().toSet
     assert(streamed === expected)
     assert(streamed.exists(_.getAs[Double]("high") == 999.0))
+  }
+
+  test("no eviction-only batch: keys behind the watermark leave with the next data batch") {
+    // three scheduled runs; the eviction horizon is 31 days (30-day
+    // watermark plus one Day bucket of slack)
+    val src = tmp("esrc")
+    val store = tmp("estore") + "/bars"
+    val ckpt = tmp("eckpt")
+    def ticks(firstId: Long, days: Seq[String]): Seq[RawEvent] =
+      days.zipWithIndex.flatMap { case (day, d) =>
+        Seq("AAA", "BBB").zipWithIndex.flatMap { case (sym, k) =>
+          Seq("09:30:00", "15:45:00").zipWithIndex.map { case (hms, h) =>
+            (firstId + d * 4 + k * 2 + h, nanos(s"$day $hms"), 7L, sym,
+              10.0 + d + k + h, "{}")
+          }
+        }
+      }
+    val runs = Seq(
+      // run 1: 5 days x 2 symbols; the watermark moves to Jan 5 - 31 d
+      ticks(0L, (1 to 5).map(d => f"2024-01-$d%02d")),
+      // run 2: past the horizon; its batch still runs under run 1's
+      // watermark, so nothing is evicted, and it moves the watermark to
+      // Feb 20 - 31 d = Jan 20, past every run-1 key
+      ticks(100L, Seq("2024-02-20")),
+      // run 3: its batch runs under the Jan 20 watermark and evicts run 1
+      ticks(200L, Seq("2024-02-21")))
+    val progress = runs.zipWithIndex.map { case (rows, i) =>
+      addEventFile(src, s"events_run$i.parquet", rows)
+      val (q, _) = StreamingIngest.start(spark, src, store, ckpt)
+      q.awaitTermination(120000)
+      assert(q.exception.isEmpty)
+      q.recentProgress.toSeq
+    }
+    val inputRows = progress.map(_.map(_.numInputRows))
+    assert(inputRows.forall(r => r.nonEmpty && r.forall(_ > 0)),
+      s"bar-query input rows per run: $inputRows")
+    // (state rows, rows removed) after each run's last batch: 10 keys,
+    // then 10 + 2, then run 1's 10 evicted, leaving runs 2 and 3's keys
+    val state = progress.map { p =>
+      val op = p.last.stateOperators.head
+      (op.numRowsTotal, op.numRowsRemoved)
+    }
+    assert(state == Seq((10L, 0L), (12L, 0L), (4L, 10L)), s"state $state")
+    // eviction only drops state: the store equals one run over all files
+    val oneShot = tmp("eoneshot") + "/bars"
+    val (q, _) = StreamingIngest.start(spark, src, oneShot, tmp("eckpt1"))
+    q.awaitTermination(120000)
+    val stored = BarStore.read(spark, store).collect().toSet
+    assert(stored.size == 14)
+    assert(stored === BarStore.read(spark, oneShot).collect().toSet)
   }
 
   test("merge preserves untouched keys in a touched partition") {
