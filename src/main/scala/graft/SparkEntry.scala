@@ -603,7 +603,7 @@ object SparkEntry {
       Dedup.reportTokensSql(DuckDialect), needs = Seq(MinhashSigStore)),
     Query("dedup_cross_source", Dedup.crossSource,
       Dedup.crossSourceSql(DuckDialect), needs = Seq(MinhashSigStore)),
-    // Finishing-pass keeper election (stream-then-batch compaction)
+    // Keeper election over verified near-dup clusters
     Query("dedup_compact", Dedup.compactKept,
       Dedup.compactKeptOracleSql(DuckDialect),
       needs = Seq(MinhashSigStore, MinhashPairCache)),

@@ -1265,8 +1265,8 @@ object Dedup {
 
   /** Banding + candidate generation + exact-Jaccard verification over
     * prepared gram/signature relations — the pair stage of
-    * `minhashLsh`, factored so callers with their own relations (the
-    * streaming finishing pass) reuse it.  Unordered: the oracle-facing
+    * `minhashLsh`, factored so callers with their own relations
+    * (`verifiedPairsOf`) reuse it.  Unordered: the oracle-facing
     * entry point adds the ORDER BY. */
   private def minhashPairsFrom(grams: DataFrame, sig: DataFrame,
       maxBucket: Int = MaxBandBucket): DataFrame = {
@@ -1401,12 +1401,10 @@ object Dedup {
 
   /** Verified MinHash-LSH near-dup pairs over an arbitrary
     * (doc_id, text) relation — the same banding + J ≥ 0.5 verification
-    * as `minhashLsh`, for callers that bring their own corpus slice
-    * (the streaming finishing pass `StreamingNearDedup.compact` runs
-    * this over a settled window).  The gram/signature relations are
-    * deliberately NOT session-cached: a compaction window is a
-    * one-shot slice, and identical shuffle subplans across the verify
-    * joins fall into ReusedExchange. */
+    * as `minhashLsh`, for callers that bring their own corpus slice.
+    * The gram/signature relations are deliberately NOT session-cached:
+    * a caller's slice is one-shot, and identical shuffle subplans
+    * across the verify joins fall into ReusedExchange. */
   def verifiedPairsOf(docs: DataFrame): DataFrame =
     verifiedPairsOf(docs, MaxBandBucket)
 
@@ -1435,25 +1433,17 @@ object Dedup {
   }
 
   /** Cluster-canonical keeper set over an arbitrary
-    * (doc_id, ingest_ts, text) relation: verified pairs
-    * (`verifiedPairsOf`) → connected components → keep the
+    * (doc_id, ingest_ts) relation and its verified near-dup pairs
+    * (doc_id_a, doc_id_b): connected components → keep the
     * min-(ingest_ts, doc_id) member per cluster; documents in no
     * verified pair keep themselves.  Returns (doc_id, ingest_ts) of
-    * the keepers — the absolute dedup result the streaming
-    * candidate-level operator approximates, packaged for the
-    * finishing pass (`StreamingNearDedup.compact`).
+    * the keepers.  Callers pass pairs they already hold (the
+    * `dedup_compact` query passes the session-cached MinHash-LSH
+    * pairs), so the shingle + MinHash + banding chain runs once.
     *
     * Scale: only paired docs (≪ corpus) enter the component graph;
     * the keeper election is one hash shuffle on cluster_rep with
     * map-side-combining min_by. */
-  def canonicalKeepers(docs: DataFrame): DataFrame =
-    canonicalKeepersFrom(docs,
-      verifiedPairsOf(docs.select("doc_id", "text")))
-
-  /** `canonicalKeepers` over precomputed verified pairs — so callers
-    * that already hold the session-cached gram/signature relations
-    * (the `dedup_compact` query) don't re-pay the full shingle +
-    * MinHash + banding chain the generic entry derives from scratch. */
   def canonicalKeepersFrom(docs: DataFrame, verified: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     val clusters = connectedComponents(
@@ -1468,8 +1458,8 @@ object Dedup {
         col("w.ingest_ts").as("ingest_ts"))
   }
 
-  /** The finishing-pass keeper election as an oracle-checked batch
-    * query: `canonicalKeepers` over `documents` with a deterministic
+  /** The keeper election as an oracle-checked batch query:
+    * `canonicalKeepersFrom` over `documents` with a deterministic
     * synthetic arrival order (ingest_ts = doc_id seconds since epoch),
     * so the keeper of each verified near-dup cluster is its minimum
     * doc_id and the whole result is reproducible in any engine. */

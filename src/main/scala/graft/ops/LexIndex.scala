@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions._
 /** Persisted inverted (postings) index for lexical BM25 retrieval —
   * the 100 TB deployment shape of `text_bm25_topk`, mirroring the IVF
   * store lifecycle: build-if-absent under a content fingerprint with
-  * atomic publish, caller-managed append-only maintenance (batch and
-  * streaming), small-file compaction, and a serving path that opens
-  * only the partitions a query touches.
+  * atomic publish, caller-managed append-only maintenance, and a
+  * serving path that opens only the partitions a query touches.
   *
   * Layout (`indexPath/`):
   *  - `postings/tshard=<h60(term) % Shards>/…parquet` — rows
@@ -25,13 +24,10 @@ import org.apache.spark.sql.functions._
   *    path folds them with a `batch_id` dedup so an at-least-once
   *    replayed append can never double-count the corpus.
   *
-  * Replay contract (same as the IVF stores): appends are atomic per
-  * file; a crashed-and-replayed batch re-appends identical rows, and
-  * serving dedups postings by (doc_id, term) and stats by batch_id —
-  * so at-least-once delivery degrades to exactly-once results.
-  * Compaction (`IndexCompaction.compactIndex` with partCol
-  * "tshard") is the reconciliation point that collapses the
-  * duplicates physically.
+  * Replay contract: appends are atomic per file; a crashed-and-
+  * replayed batch re-appends identical rows, and serving dedups
+  * postings by (doc_id, term) and stats by batch_id — so at-least-once
+  * delivery degrades to exactly-once results.
   *
   * Serving reads ONLY the query terms' shard partitions (the shard
   * set is |q| driver-side longs — lands in PartitionFilters) and
@@ -196,7 +192,7 @@ object LexIndex {
     * `Retrieval.lexIndexHealthSql` — the oracle recomputing the same
     * relation from raw documents).  Reads only (doc_id, term, tshard)
     * — column-pruned — and applies the standing replay dedup so a
-    * streaming-maintained store audits identically. */
+    * store with replayed appends audits identically. */
   def indexHealth(spark: SparkSession, dir: String): DataFrame =
     indexHealth(spark, dir, None)
 

@@ -550,15 +550,13 @@ object Retrieval {
     * in both engines and re-quantized immediately — the
     * `unigram_logprob`/DSIR rule applied to a trained model. */
   /** µ-quantized sigmoid of the mean-token logit — shared by every
-    * scoring site (training epochs, final scoring, and the streaming
-    * gate's frozen-model scorer). */
+    * scoring site (training epochs and final scoring). */
   private[ops] def clfPU(d: SqlDialect, sU: String, nTok: String): String =
     s"""CAST(round(${d.dlit(1e6)} / (${d.dlit(1.0)}
        |      + exp(-(CAST($sU AS DOUBLE) / (CAST($nTok AS DOUBLE) * ${d.dlit(1e6)}))))) AS BIGINT)""".stripMargin
 
-  /** Training CTEs only — `nd, r1, g1, w1, …, w$ClfEpochs`; append a
-    * SELECT over `w$ClfEpochs` to extract the frozen model (the
-    * fit-batch half of the streaming gate). */
+  /** Training CTEs only — `nd, r1, g1, w1, …, w$ClfEpochs`; the
+    * tail CTEs score against `w$ClfEpochs`. */
   private[ops] def clfTrainCtes(d: SqlDialect, docRel: String,
       tfbRel: String): String = {
     val lr = d.dlit(ClfLr)
@@ -620,41 +618,6 @@ object Retrieval {
        |FROM pfin p JOIN $docRel dd ON dd.doc_id = p.doc_id
        |GROUP BY dd.lang
        |ORDER BY dd.lang""".stripMargin
-  }
-
-  /** Fit-batch half of the streaming classifier gate: train the
-    * `ClfEpochs`-epoch model on a STATIC corpus (arbitrary DataFrame
-    * with doc_id/lang/text) and return the frozen weight relation
-    * (fb, w_u) — ≤ `DsirBuckets` rows, broadcastable.  Training on
-    * the fixture `documents` table yields bit-identical weights to
-    * the ones `text_quality_classifier` trains (same CTE text over
-    * the same relations). */
-  def clfModel(corpus: DataFrame): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    // per-call view names: a second fit in the same session (another
-    // corpus, another thread) must not clobber this one's relations
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val (src, docV, tfbV) =
-      (s"clf_src_$tag", s"clf_doc_$tag", s"clf_tfb_$tag")
-    corpus.createOrReplaceTempView(src)
-    try {
-      spark.sql(clfDocSql(SparkDialect, src)).createOrReplaceTempView(docV)
-      spark.sql(clfTfbSql(SparkDialect, src)).createOrReplaceTempView(tfbV)
-      // materialize: the model is <= DsirBuckets rows BY DESIGN, and a
-      // stream-static join re-evaluates its static side every
-      // micro-batch — returning the lazy 3-epoch training plan would
-      // re-train per batch.  Collect once, hand back a local relation:
-      // frozen in cost, not just in value.
-      val rows = spark.sql(
-          s"""WITH ${clfTrainCtes(SparkDialect, docV, tfbV)}
-             |SELECT fb, w_u FROM w$ClfEpochs""".stripMargin)
-        .collect().toIndexedSeq
-      import spark.implicits._
-      rows.map(r => (r.getAs[Long]("fb"), r.getAs[Long]("w_u")))
-        .toDF("fb", "w_u")
-    } finally
-      Seq(src, docV, tfbV).foreach(spark.catalog.dropTempView(_))
   }
 
   /** Trainable quality classifier — the GPT-3/PaLM-style

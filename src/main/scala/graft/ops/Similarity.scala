@@ -1544,10 +1544,10 @@ object Similarity {
     val cand = lists.join(broadcast(probe), "cid")
       .filter($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("nid"), $"nv", $"nn")
-      // a replayed micro-batch can re-append identical rows to a list
-      // (StreamingIndex's at-least-once contract): dedup by id before
-      // ranking so a duplicate can never occupy two ranks and push a
-      // genuine neighbor out of the top-k
+      // a list that holds a row twice (a replayed or retried write)
+      // must not rank it twice: dedup by id before ranking so a
+      // duplicate can never occupy two ranks and push a genuine
+      // neighbor out of the top-k
       .dropDuplicates("qid", "nid")
     cand
       .join(broadcast(queries), "qid")
@@ -1606,109 +1606,6 @@ object Similarity {
     servePersisted(spark, store, probe,
       n.filter($"vec_id" % 100 === 0)
         .select($"vec_id".as("qid"), $"v".as("qv"), $"nrm".as("qn")))
-  }
-
-  /** Incremental maintenance of a CALLER-MANAGED fixed-centroid IVF
-    * store — the path a live index takes at 100 TB, where rebuilding
-    * rewrites the corpus but appending writes only the new vectors'
-    * list files.  `newVecs` (vec_id, embedding) are assigned to the
-    * store's codebook (the vec_id ≡ 50 picks of `dir`, exactly the
-    * codebook `ivfPersisted` builds with) and their rows land as NEW
-    * parquet files inside the existing `cid=` partitions: append-only,
-    * existing files untouched, so a concurrent probe sees a consistent
-    * (if momentarily stale) index and flips atomically per file.
-    *
-    * Calling this on an empty/absent path IS the bootstrap build, so
-    * one operator covers both lifecycle stages, and bootstrap + N
-    * appends ≡ one bootstrap over the union (spec-pinned).  Unlike the
-    * auto store of `ivfPersisted` (fingerprint-keyed, immutable), a
-    * caller-managed path is addressed directly — the caller owns
-    * versioning. */
-  def ivfAppend(spark: SparkSession, dir: String, indexPath: String,
-                newVecs: DataFrame): Unit = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = ivfBase(spark, dir)
-    val cents = fixedCentsCached(spark, dir, n)
-    val vecs = newVecs
-      .select($"vec_id", $"embedding",
-        expr(SparkDialect.toDoubleArr("embedding")).as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
-    assignedCid(vecs, cents)
-      .select($"vec_id", $"embedding", $"cid")
-      .write.mode("append").partitionBy("cid").parquet(indexPath)
-  }
-
-  /** Probe a caller-managed IVF store (built/maintained by
-    * `ivfAppend`) with `dir`'s query set against `dir`'s codebook —
-    * the same partition-pruned serving path as the auto store. */
-  def ivfServeFrom(spark: SparkSession, dir: String,
-                   indexPath: String): DataFrame = {
-    import spark.implicits._
-    val n = ivfBase(spark, dir)
-    val cents = fixedCentsCached(spark, dir, n)
-    val probe = probeCids(n.filter($"vec_id" % 100 === 0), cents)
-    servePersisted(spark, new org.apache.hadoop.fs.Path(indexPath), probe,
-      n.filter($"vec_id" % 100 === 0)
-        .select($"vec_id".as("qid"), $"v".as("qv"), $"nrm".as("qn")))
-  }
-
-  /** `ivfAppend` for the QUANTIZED store: assign `newVecs` to the
-    * fixed codebook and append their int8 rows (code, scale, nrm)
-    * as NEW parquet files inside the existing `cid=` partitions —
-    * the same append-only, per-file-atomic lifecycle as the float
-    * store, at a quarter of the bytes per appended vector.  Calling
-    * on an empty path is the bootstrap; bootstrap + N appends ≡ one
-    * bootstrap over the union (spec-pinned).  All-zero vectors are
-    * skipped (NULL scale — no codes, no cosine direction), exactly
-    * the serving-set rule of every quantized path. */
-  def ivfQuantizedAppend(spark: SparkSession, dir: String,
-                         indexPath: String, newVecs: DataFrame): Unit = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = ivfBase(spark, dir)
-    val cents = fixedCentsCached(spark, dir, n)
-    val absMax = SparkDialect.arrMax(
-      SparkDialect.arrTransform("v", "x", "abs(x)"))
-    val quantized = newVecs
-      .select($"vec_id", $"embedding",
-        expr(SparkDialect.toDoubleArr("embedding")).as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
-      .withColumn("scale", expr(
-        s"CASE WHEN $absMax = 0.0D THEN CAST(NULL AS DOUBLE) " +
-          s"ELSE 127.0D / $absMax END"))
-      .filter($"scale".isNotNull)
-      .withColumn("code", expr(SparkDialect.arrTransform(
-        "v", "x", "CAST(floor(x * scale + 0.5) AS TINYINT)")))
-    assignedCid(quantized, cents)
-      .select($"vec_id", $"code", $"scale", $"nrm", $"cid")
-      .write.mode("append").partitionBy("cid").parquet(indexPath)
-  }
-
-  /** Probe a caller-managed QUANTIZED store (built/maintained by
-    * `ivfQuantizedAppend`): same fixed-codebook probing as
-    * `ivfServeFrom`, same int8 serving as `ivfQuantizedPersisted`. */
-  def ivfQuantizedServeFrom(spark: SparkSession, dir: String,
-                            indexPath: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val n = ivfBase(spark, dir)
-    val cents = fixedCentsCached(spark, dir, n)
-    val probe = probeCids(n.filter($"vec_id" % 100 === 0), cents)
-    val absMax = SparkDialect.arrMax(
-      SparkDialect.arrTransform("v", "x", "abs(x)"))
-    val queries = n.filter($"vec_id" % 100 === 0)
-      .withColumn("scale", expr(
-        s"CASE WHEN $absMax = 0.0D THEN CAST(NULL AS DOUBLE) " +
-          s"ELSE 127.0D / $absMax END"))
-      .filter($"scale".isNotNull)
-      .withColumn("code", expr(SparkDialect.arrTransform(
-        "v", "x", "CAST(floor(x * scale + 0.5) AS TINYINT)")))
-      .select($"vec_id".as("qid"), $"code".as("qcode"),
-        $"scale".as("qscale"), $"nrm".as("qn"))
-    serveQuantized(spark,
-      new org.apache.hadoop.fs.Path(indexPath), probe, queries)
   }
 
   /** Persisted IVF over the TRAINED k-means codebook — `ivfKmeans`'s
@@ -1898,7 +1795,7 @@ object Similarity {
     * store, and when the worst list exceeds `maxBalance` (its probes
     * read that many × the ideal bytes), retrain a RIGHT-SIZED (√n)
     * codebook from the store's CURRENT contents — original corpus
-    * plus whatever streaming appends drifted it — and publish a
+    * plus whatever appends drifted it — and publish a
     * fresh store under the rebuilt contents' own fingerprint
     * (build-if-absent, atomic rename: re-running maintenance on the
     * same drifted store is idempotent, and readers of the old store
@@ -1919,9 +1816,8 @@ object Similarity {
     maintainStore(spark, dir, store.toString, storeBase, maxBalance)
   }
 
-  /** Maintenance over an explicit store path — the streaming-appended
-    * case where the lists have drifted from the corpus the codebook
-    * was trained on. */
+  /** Maintenance over an explicit store path — the case where the
+    * lists have drifted from the corpus the codebook was trained on. */
   def maintainStore(spark: SparkSession, dir: String, storePath: String,
       storeBase: Option[String], maxBalance: Double): DataFrame = {
     import spark.implicits._
@@ -2243,8 +2139,8 @@ object Similarity {
     val cand = lists.join(broadcast(probe), "cid")
       .filter($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("nid"), $"code", $"scale", $"nrm")
-      // same replay tolerance as servePersisted: an appended duplicate
-      // row must never occupy two ranks
+      // same replay tolerance as servePersisted: a duplicate row must
+      // never occupy two ranks
       .dropDuplicates("qid", "nid")
     cand
       .join(broadcast(queries), "qid")

@@ -61,8 +61,8 @@ object TextAnalysis {
 
   /** Composite [0,1] quality score, unrounded.  Parameterized on the
     * four input expressions (column names in the CTE forms, inline
-    * expressions in the single-projection streaming form) so there is
-    * exactly one formula and no textual substitution. */
+    * expressions in the single projection of `scoredSplitExprs`) so
+    * there is exactly one formula and no textual substitution. */
   private def scoreExpr(nTokens: String = "n_tokens", nSym: String = "n_sym",
                         nDigit: String = "n_digit",
                         nChars: String = "n_chars"): String =
@@ -84,9 +84,9 @@ object TextAnalysis {
   /** The quality score + split assignment as self-contained SELECT
     * expressions over (doc_id, text) — the fragments inlined into one
     * projection, for callers that need a single narrow pass (the
-    * streaming curation path).  Same lenMinus/scoreExpr/splitCase
-    * definitions as qualitySql/curationSql, so stream, batch, and
-    * oracle cannot diverge. */
+    * weighted sample's score column).  Same lenMinus/scoreExpr/
+    * splitCase definitions as qualitySql/curationSql, so the inlined
+    * and CTE forms cannot diverge. */
   def scoredSplitExprs(d: SqlDialect): Seq[String] = {
     val inlined = scoreExpr(
       nTokens = s"CAST(${d.arrSize(d.tokens("text"))} AS BIGINT)",
@@ -203,10 +203,10 @@ object TextAnalysis {
     // composed from the SAME fragments as quality/dedup/split — the
     // rounded score gate matches text_quality's displayed score exactly
     val norm = d.reReplace("trim(lower(text))", "\\s+", " ")
-    // n_chars is COMPUTED from the text (like qualitySql and the
-    // streaming scoredSplitExprs), never read from the stored column:
-    // the score must be a pure function of the text so batch, stream,
-    // and oracle agree even on corpora whose stored n_chars drifts
+    // n_chars is COMPUTED from the text (like qualitySql and
+    // scoredSplitExprs), never read from the stored column: the score
+    // must be a pure function of the text so every form and the
+    // oracle agree even on corpora whose stored n_chars drifts
     s"""WITH t AS (
        |  SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars, text,
        |    ${d.tokens("text")} AS toks
@@ -799,8 +799,8 @@ object TextAnalysis {
     * fires and pins counts and redaction.  Scale: a shuffle-free
     * narrow projection, exactly like `qualitySql`. */
   /** The PII pattern families, shared by the batch query, the
-    * streaming gate (`StreamingCuration.piiGate`) and the oracle —
-    * one definition, three consumers. */
+    * curation audit logs and the oracle — one definition for every
+    * consumer. */
   val PiiEmail = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
   val PiiIp = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
   val PiiSsn = "[0-9]{3}-[0-9]{2}-[0-9]{4}"
@@ -840,10 +840,9 @@ object TextAnalysis {
     * NULL for a stage they never reached — and the PII families), plus
     * the final kept decision.  `kept` mirrors EXACTLY the
     * `curationSql` pipeline (quality + keeper); `has_pii` is an
-    * advisory flag, not a kept conjunct, because the PII gate's
-    * default mode REDACTS rather than drops
-    * (`StreamingCuration.piiGate`) — a drop-mode pipeline ANDs it in
-    * itself.  Every predicate is the SAME shared fragment the
+    * advisory flag, not a kept conjunct, because PII is redacted
+    * (`piiRedact`) rather than dropped — a drop-mode pipeline ANDs it
+    * in itself.  Every predicate is the SAME shared fragment the
     * individual operators use, so the log cannot disagree with the
     * pipeline it explains (spec-pinned against `curation` + an
     * independent recomputation).
@@ -889,28 +888,6 @@ object TextAnalysis {
        |LEFT JOIN rep r ON r.text_md5 = k.text_md5
        |ORDER BY q.doc_id""".stripMargin
   }
-
-  /** Surprisal gate band for the composed STREAMING DAG
-    * (`StreamingCuration.curationDag`): docs whose mean unigram
-    * surprisal falls OUTSIDE [lo, hi] are dropped — too low reads as
-    * boilerplate the model has memorized, too high as gibberish/
-    * out-of-domain.
-    *
-    * A stream must pin its band A PRIORI (the `histPartial` fixed-
-    * range argument: a data-derived band would change per micro-batch
-    * and make verdicts time-dependent), so the streaming entry points
-    * take it as parameters; these defaults are fit to the generated
-    * benchmark fixture's unigram distribution (~3.39–3.41 at every
-    * generated SF) and are demo values only.  A real deployment fits
-    * the band from a batch snapshot of its own corpus —
-    * `surprisalBand(spark, dir)` returns exactly the [Q1, Q3]
-    * central-quantile band the BATCH curation log derives in-query —
-    * and passes the result to the stream.  The registered batch
-    * queries (`text_curation_log_full`, `text_curation_funnel`) do NOT
-    * use these constants: they derive the band from the corpus inside
-    * the query, so they work unchanged on any corpus. */
-  val SurprisalLo: Double = 3.394
-  val SurprisalHi: Double = 3.410
 
   /** Quantile pair defining the corpus-derived surprisal band: the
     * central [Q1, Q3] half keeps the corpus bulk and both tails stay
@@ -1020,10 +997,9 @@ object TextAnalysis {
   }
 
   /** Fit the corpus-derived surprisal band of the batch curation log
-    * as two doubles — the helper a streaming deployment calls on a
-    * batch snapshot to obtain the band it pins a priori.  Session-
-    * memoized per dataset; reads the cached `sur` view, so the corpus
-    * LM fit is paid once. */
+    * as two doubles, which the curation queries inline as literals.
+    * Session-memoized per dataset; reads the cached `sur` view, so the
+    * corpus LM fit is paid once. */
   def surprisalBand(spark: SparkSession, dir: String): Option[(Double, Double)] = {
     registerSurView(spark, dir)
     RelationCache.cachedScalar(spark, s"curation_band:$dir") {

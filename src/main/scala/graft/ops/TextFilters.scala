@@ -77,8 +77,7 @@ object TextFilters {
     * consumer drops it).  Identical in cost to `qualitySql`, which
     * plan-shape tests already pin shuffle-free. */
   /** Stage 1 — raw counts over (text, toks) columns.  Shared verbatim
-    * by the SQL relation (both dialects) and the streaming gate's
-    * `selectExpr`, so the three surfaces cannot diverge. */
+    * by the SQL relation of both dialects, so they cannot diverge. */
   def gopherCountExprs(d: SqlDialect): Seq[String] = {
     val ws = d.wsTokens("text")
     val lines = d.arrFilter(
@@ -238,7 +237,7 @@ object TextFilters {
     * broadcast-trivial. */
   /** CM bucket of token expression `tok` in sketch row `r`:
     * h60(token '#' row) mod width — the one hash definition the batch
-    * relation, the DuckDB oracle, and the streaming sketch share. */
+    * relation and the DuckDB oracle share. */
   def cmBucket(d: SqlDialect, tok: String, r: String,
                width: Int = CmWidth): String =
     s"(${d.h60(s"$tok || '#' || ${d.castStr(r)}")} % $width)"

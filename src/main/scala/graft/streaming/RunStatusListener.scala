@@ -17,11 +17,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * The health projection (S7/P4/A3): the snapshot exposes counters and
   * the last error, never the heavy bar payload — and implements the
   * *intended* v1 semantics (real bar counts) rather than the v2 defect
-  * where `bars_count` is always 0 (SURVEY.md §0).  A progress event
-  * that read no input (a no-data batch, which Spark runs when only the
-  * watermark moved; `StreamingIngest.start`'s bar query runs none)
-  * advances the timestamps and batch count but keeps the last landed
-  * count.
+  * where `bars_count` is always 0 (SURVEY.md §0).  The landed count is
+  * the bar query's observed metric (`StreamingIngest.LandedBarsMetric`):
+  * the bars its last data batch wrote to the store, not the tick rows
+  * it read.  A progress event without that metric (the quarantine
+  * query's, or a batch that read no input) advances the timestamps and
+  * batch count but keeps the last landed count.
   *
   * State metrics are kept per query id: `stateOperators` is the union
   * of each query's latest progress, in the order the queries first
@@ -40,8 +41,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object RunStatusListener {
   /** One stateful operator's footprint in the latest progress: the
     * observability a pipeline needs to size watermarks from data —
-    * e.g. the near-dup dedup's live band-key count or the anomaly
-    * detector's keyed-state rows, plus eviction flow and memory. */
+    * e.g. the bar aggregation's live (symbol, bucket) rows — plus
+    * eviction flow and memory. */
   final case class StateMetric(
       operatorName: String,
       stateRows: Long,
@@ -178,9 +179,9 @@ final class RunStatusListener extends StreamingQueryListener {
         lastAttemptTimestampUtc = Some(p.timestamp),
         lastSuccessTimestampUtc = Some(p.timestamp),
         batchesCompleted = s.batchesCompleted + 1,
-        // a batch that read nothing landed nothing: keep the last count
-        barsInLastBatch =
-          if (p.numInputRows > 0) p.numInputRows else s.barsInLastBatch,
+        barsInLastBatch = Option(p.observedMetrics)
+          .flatMap(m => Option(m.get(StreamingIngest.LandedBarsMetric)))
+          .fold(s.barsInLastBatch)(_.getAs[Long]("bars")),
         stateOperators = next.values.flatten.toSeq), next)
     }
     bumpVersion()
@@ -200,12 +201,11 @@ final class RunStatusListener extends StreamingQueryListener {
     RunStatusListener.statusDf(spark, snapshot)
 
   /** Per-stateful-operator metrics of each query's latest micro-batch
-    * as a queryable table — one row per operator (dedup registry, windowed
-    * aggregation, keyed detector …) with its live state row count,
-    * per-batch update/eviction flow and memory footprint.  This is the
-    * feedback loop for sizing watermarks: a band-key count that grows
-    * batch over batch means the horizon outlives the feed's actual
-    * duplicate lag. */
+    * as a queryable table — one row per operator (windowed aggregation,
+    * watermark dedup …) with its live state row count, per-batch
+    * update/eviction flow and memory footprint.  This is the feedback
+    * loop for sizing watermarks: a state row count that grows batch
+    * over batch means the horizon outlives the feed's actual lag. */
   def stateMetricsDf(spark: SparkSession): DataFrame =
     RunStatusListener.stateMetricsDf(spark, snapshot)
 }

@@ -24,6 +24,11 @@ import graft.ingest.{BarStore, Canonicalize, Quarantine}
   */
 object StreamingIngest {
 
+  /** Name of the bar query's observed metric: one long, `bars`, the
+    * rows a micro-batch lands in the store (`RunStatusListener` reads
+    * it as `bars_in_last_batch`). */
+  val LandedBarsMetric = "landed_bars"
+
   /** Raw event-file schema (ts as raw nanos Long — see Tables.events). */
   val eventSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
@@ -178,11 +183,12 @@ object StreamingIngest {
     * event is isolated without failing (or even touching) the bar
     * batch.  All three quarantine outputs and the summary feed are
     * `SinkRetention.appendDated` sinks (capture-date partitioned, no
-    * file-sink manifest), so `SinkRetention.vacuum` gives every
-    * side sink the same age-gated retention the bar store has.  It is a separate query because the rejects must be
-    * captured at raw-event granularity, BEFORE the stateful window
-    * aggregation that the main query's foreachBatch sees; both drain
-    * under the same trigger (for `AvailableNow` the spec awaits both).
+    * file-sink manifest), so `SinkRetention.vacuum` gives every side
+    * sink the same age-gated retention the bar store has.  It is a
+    * separate query because the rejects must be captured at raw-event
+    * granularity, BEFORE the stateful window aggregation that the main
+    * query's foreachBatch sees; both drain under the same trigger (for
+    * `AvailableNow` the spec awaits both).
     * Inside foreachBatch, aggregated rows that `Canonicalize` would
     * silently drop (null bucket) are likewise quarantined to
     * `quarantineDir`/bars instead of vanishing — these are per-micro-
@@ -198,6 +204,11 @@ object StreamingIngest {
     * Both queries start from one `readEvents` stream (one schema probe
     * per call); each still gets its own source and checkpoint.
     *
+    * The bar query observes `LandedBarsMetric`: its batch's rows with a
+    * non-null bucket, the rows canonicalize keeps and the store merge
+    * lands.  It reaches the listener in the batch's progress
+    * (`observedMetrics`), counted once because the batch is persisted.
+    *
     * One evaluation per micro-batch: the `foreachBatch` body uses its
     * batch several times (emptiness checks, the store merge's read and
     * write, the summary publish), and every use of an unpersisted batch
@@ -211,7 +222,7 @@ object StreamingIngest {
     * No eviction-only micro-batch: the bar query starts with
     * `spark.sql.streaming.noDataMicroBatches.enabled=false` (set for
     * its `start()` only; the quarantine query and other streaming
-    * modules keep Spark's default).  Otherwise each `AvailableNow` drain
+    * queries keep Spark's default).  Otherwise each `AvailableNow` drain
     * ends with a batch that reads nothing and exists only because the
     * watermark moved: it restores and commits the whole state store,
     * and in update mode it emits no row.  Without it, the keys the
@@ -253,6 +264,7 @@ object StreamingIngest {
         .start()
     }
     val bars = streamingBars(events, timeframe)
+      .observe(LandedBarsMetric, count_if(col("t").isNotNull).as("bars"))
     val barWriter = bars.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)

@@ -1,12 +1,10 @@
 package graft.ops
 
 import graft.SparkSuite
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Lifecycle pins for the persisted lexical (BM25) index: persisted
   * serve ≡ the in-memory operator, bootstrap + appends ≡ one-shot
-  * build, replay idempotence, compaction transparency, and streaming
-  * maintenance equivalence. */
+  * build, and replay idempotence of serve and shard health. */
 class LexIndexSpec extends SparkSuite {
   import spark.implicits._
 
@@ -45,21 +43,6 @@ class LexIndexSpec extends SparkSuite {
     assert(rows(LexIndex.serve(spark, path)) == before)
   }
 
-  test("compaction collapses replayed files and preserves the serve") {
-    val path = java.nio.file.Files.createTempDirectory("lexc").toString
-    LexIndex.append(spark, path, docsAll, "b0")
-    LexIndex.append(spark, path, docsAll, "b0") // physical duplicates
-    val before = rows(LexIndex.serve(spark, path))
-    val done = IndexCompaction.compactIndex(
-      spark, s"$path/postings", 128L * 1024 * 1024, partCol = "tshard")
-    assert(done.nonEmpty, "duplicated postings must trigger a rewrite")
-    assert(rows(LexIndex.serve(spark, path)) == before)
-    // the exact-duplicate rows are physically gone: raw row count of a
-    // compacted partition equals the distinct count
-    val raw = spark.read.parquet(s"$path/postings")
-    assert(raw.count() == raw.dropDuplicates("doc_id", "term").count())
-  }
-
   test("shard health audits a replayed store identically") {
     val path = java.nio.file.Files.createTempDirectory("lexh").toString
     LexIndex.append(spark, path, docsAll, "b0")
@@ -73,21 +56,5 @@ class LexIndexSpec extends SparkSuite {
     // replayed postings do not change the audit (dedup shield)
     LexIndex.append(spark, path, docsAll, "b0")
     assert(rows(LexIndex.healthOf(spark, path)) == clean)
-  }
-
-  test("streaming maintenance converges to the batch build") {
-    implicit val sqlCtx = spark.sqlContext
-    val full = docsAll.collect().map(r => (r.getLong(0), r.getString(1)))
-    val path = java.nio.file.Files.createTempDirectory("lexs").toString
-    val input = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingIndex.startLex(
-      input.toDS().toDF("doc_id", "text"), path)
-    try {
-      full.grouped(150).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    assert(rows(LexIndex.serve(spark, path)) == rows(Retrieval.bm25(spark, sf())))
   }
 }

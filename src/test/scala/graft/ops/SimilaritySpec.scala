@@ -357,29 +357,6 @@ class SimilaritySpec extends SparkSuite {
     assert(r2.map(_.toSeq).toSeq != r1)
   }
 
-  test("bootstrap + append to a managed IVF store equals one build over the union") {
-    import spark.implicits._
-    val full = graft.Tables.embeddings(spark, sf())
-      .select($"vec_id", $"embedding")
-    val a = full.filter($"vec_id" % 5 =!= 4)
-    val b = full.filter($"vec_id" % 5 === 4)
-    val incr = java.nio.file.Files.createTempDirectory("ivf_incr").toString
-    Similarity.ivfAppend(spark, sf(), incr, a)   // bootstrap
-    Similarity.ivfAppend(spark, sf(), incr, b)   // increment
-    val whole = java.nio.file.Files.createTempDirectory("ivf_whole").toString
-    Similarity.ivfAppend(spark, sf(), whole, full)
-    val rIncr = Similarity.ivfServeFrom(spark, sf(), incr)
-      .collect().map(_.toSeq).toSeq
-    val rWhole = Similarity.ivfServeFrom(spark, sf(), whole)
-      .collect().map(_.toSeq).toSeq
-    assert(rIncr.nonEmpty && rIncr == rWhole)
-    // the managed store serves the same results as the auto store when
-    // it holds the same corpus (same codebook, probes, arithmetic)
-    val auto = Similarity.ivfPersisted(spark, sf()).collect()
-      .map(_.toSeq).toSeq
-    assert(rWhole == auto)
-  }
-
   test("quantized rerank: exact scores, candidates from the coarse int8 stage") {
     graft.Tables.embeddings(spark, sf())
       .createOrReplaceTempView("embeddings")
@@ -423,35 +400,6 @@ class SimilaritySpec extends SparkSuite {
       val k = (s(0).asInstanceOf[Long], s(1).asInstanceOf[Long])
       brute.get(k).foreach(c => assert(c == s(2).asInstanceOf[Double], s"$k"))
     }
-  }
-
-  test("quantized managed store: bootstrap + append ≡ one build, serves like auto") {
-    import spark.implicits._
-    val full = graft.Tables.embeddings(spark, sf())
-      .select($"vec_id", $"embedding")
-    val a = full.filter($"vec_id" % 5 =!= 4)
-    val b = full.filter($"vec_id" % 5 === 4)
-    val incr = java.nio.file.Files.createTempDirectory("ivfq_incr").toString
-    Similarity.ivfQuantizedAppend(spark, sf(), incr, a)   // bootstrap
-    Similarity.ivfQuantizedAppend(spark, sf(), incr, b)   // increment
-    val whole = java.nio.file.Files.createTempDirectory("ivfq_whole").toString
-    Similarity.ivfQuantizedAppend(spark, sf(), whole, full)
-    val rIncr = Similarity.ivfQuantizedServeFrom(spark, sf(), incr)
-      .collect().map(_.toSeq).toSeq
-    val rWhole = Similarity.ivfQuantizedServeFrom(spark, sf(), whole)
-      .collect().map(_.toSeq).toSeq
-    assert(rIncr.nonEmpty && rIncr == rWhole)
-    // same corpus ⇒ the managed quantized store serves exactly the
-    // auto store's ranking (same codebook, probes, int8 arithmetic)
-    val auto = Similarity.ivfQuantizedPersisted(spark, sf()).collect()
-      .map(_.toSeq).toSeq
-    assert(rWhole == auto)
-    // replay tolerance: re-appending an already-appended batch must
-    // not change served results (dropDuplicates in the serve path)
-    Similarity.ivfQuantizedAppend(spark, sf(), incr, b)
-    val replayed = Similarity.ivfQuantizedServeFrom(spark, sf(), incr)
-      .collect().map(_.toSeq).toSeq
-    assert(replayed == rWhole)
   }
 
   test("source coherence matches an independent Scala recomputation") {

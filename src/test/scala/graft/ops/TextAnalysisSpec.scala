@@ -263,9 +263,11 @@ class TextAnalysisSpec extends SparkSuite {
     val log = TextAnalysis.curationLog(spark, sf()).collect()
       .map(r => r.getLong(0) -> r).toMap
     assert(log.size == 500)
-    // stage 1: passed_quality == membership in the streaming/batch gate
-    val passers = graft.streaming.StreamingCuration.curate(
-        graft.Tables.documents(spark, sf()))
+    // stage 1: passed_quality == membership in the inlined score gate
+    graft.functions.GraftFunctions.register(spark)
+    val passers = graft.Tables.documents(spark, sf())
+      .selectExpr(("doc_id" +: TextAnalysis.scoredSplitExprs(SparkDialect)): _*)
+      .filter("quality_score >= 0.5")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     log.foreach { case (id, r) =>
       assert(r.getAs[Boolean]("passed_quality") == passers.contains(id), s"doc $id")

@@ -42,38 +42,34 @@ class RunStatusListenerSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val listener = new RunStatusListener
     spark.streams.addListener(listener)
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def t(h: Int) = new java.sql.Timestamp(t0.getTime + h * 3600L * 1000L)
-    val q = StreamingNearDedup.dedupDocs(
-        input.toDS().toDF("doc_id", "ingest_ts", "text"))
+    val input = MemoryStream[(java.sql.Timestamp, String, Double)]
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 09:30:00")
+    def t(d: Int) = new java.sql.Timestamp(t0.getTime + d * 86400L * 1000L)
+    // the ingest's bar aggregation: one state row per (symbol, day),
+    // started without no-data batches like StreamingIngest.start's
+    val writer = StreamingIngest.streamingBars(
+        input.toDS().toDF("ts", "event_type", "value"))
       .writeStream.format("memory").queryName("rsl_state_sink")
-      .outputMode(OutputMode.Append()).start()
+      .outputMode(OutputMode.Update())
+    val q = graft.GraftSession.withConf(spark,
+      "spark.sql.streaming.noDataMicroBatches.enabled", "false")(writer.start())
     try {
-      input.addData(Seq(
-        (1L, t(0), "the quick brown fox jumps over the lazy dog today"),
-        (2L, t(0), "pack my box with five dozen assorted liquor jugs")))
+      input.addData((t(0), "AAA", 1.0), (t(0), "BBB", 2.0), (t(0), "AAA", 3.0))
       q.processAllAvailable()
-      input.addData(Seq(
-        (3L, t(1), "sphinx of black quartz judge my vow said the king")))
+      input.addData((t(1), "AAA", 4.0))
       q.processAllAvailable()
       val deadline = System.currentTimeMillis() + 20000
-      while (listener.snapshot.stateOperators.isEmpty &&
+      while (listener.snapshot.batchesCompleted < 2 &&
         System.currentTimeMillis() < deadline) Thread.sleep(100)
       val metrics = listener.stateMetricsDf(spark).collect()
-      assert(metrics.nonEmpty, "a stateful chain must report state operators")
-      val byName = metrics.map(r =>
-        r.getAs[String]("operator_name") -> r.getAs[Long]("state_rows")).toMap
-      // the band-key registry: 3 docs x 8 bands = 24 live keys
-      val dedupRows = byName.collect {
-        case (name, rows) if name.contains("transformWithState") => rows
-      }
-      assert(dedupRows.nonEmpty, s"operators seen: ${byName.keySet}")
-      assert(dedupRows.head == 24L,
-        s"band-key count should be 3 docs x 8 bands, got $byName")
-      // the windowed fresh-band aggregation holds state too
-      assert(metrics.length >= 2)
-      assert(metrics.forall(_.getAs[Long]("memory_used_bytes") >= 0L))
+      assert(metrics.length == 1, "the bar aggregation is one stateful operator")
+      val m = metrics.head
+      // AAA and BBB on day 0, AAA on day 1; the 30-day horizon evicts none
+      assert(m.getAs[Long]("state_rows") == 3L, m)
+      // the second batch touched only (AAA, day 1)
+      assert(m.getAs[Long]("rows_updated") == 1L, m)
+      assert(m.getAs[Long]("rows_removed") == 0L, m)
+      assert(m.getAs[Long]("memory_used_bytes") >= 0L)
     } finally {
       q.stop()
       spark.streams.removeListener(listener)
@@ -81,37 +77,46 @@ class RunStatusListenerSpec extends SparkSuite {
   }
 
   test("state metrics are kept per query, in either delivery order") {
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
     import org.apache.spark.sql.streaming.ProgressEvents.{progress, stateOperator}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import RunStatusListener.StateMetric
-    // the ingest's two queries: the bar query holds the aggregation's
-    // state, the quarantine query holds none
+    // the ingest's two queries read the same 2379 tick rows; the bar
+    // query holds the aggregation's state and observes the bars it
+    // lands, the quarantine query holds and observes neither
     val bar = java.util.UUID.randomUUID()
     val quarantine = java.util.UUID.randomUUID()
-    def barBatch(batchId: Long, rows: Long) = progress(bar, batchId,
-      s"2024-01-0${batchId + 1}T00:00:00.000Z", 40L,
+    def barBatch(batchId: Long, rows: Long, landed: Long) = progress(bar,
+      batchId, s"2024-01-0${batchId + 1}T00:00:00.000Z", 2379L,
       Seq(stateOperator("stateStoreSave", rows, rowsUpdated = 40L,
-        rowsRemoved = 3L, memoryBytes = 4096L)))
+        rowsRemoved = 3L, memoryBytes = 4096L)),
+      Map(StreamingIngest.LandedBarsMetric -> new GenericRowWithSchema(
+        Array[Any](landed), StructType(Seq(StructField("bars", LongType))))))
     def quarantineBatch(batchId: Long) = progress(quarantine, batchId,
-      s"2024-01-0${batchId + 1}T00:00:01.000Z", 40L, Seq.empty)
+      s"2024-01-0${batchId + 1}T00:00:01.000Z", 2379L, Seq.empty)
     def barMetric(rows: Long) =
       Seq(StateMetric("stateStoreSave", rows, 40L, 3L, 4096L))
 
-    // (order, events, the bar query's state rows after each event)
+    // (order, events, the bar query's state rows and bars_in_last_batch
+    // after each event)
     val orders = Seq(
-      ("bar query first", Seq(barBatch(0, 120L), quarantineBatch(0),
-        barBatch(1, 160L), quarantineBatch(1)),
-        Seq(Some(120L), Some(120L), Some(160L), Some(160L))),
-      ("quarantine query first", Seq(quarantineBatch(0), barBatch(0, 120L),
-        quarantineBatch(1), barBatch(1, 160L)),
-        Seq(None, Some(120L), Some(120L), Some(160L))))
-    orders.foreach { case (order, events, barRows) =>
+      ("bar query first", Seq(barBatch(0, 120L, 40L), quarantineBatch(0),
+        barBatch(1, 160L, 7L), quarantineBatch(1)),
+        Seq(Some(120L) -> 40L, Some(120L) -> 40L, Some(160L) -> 7L,
+          Some(160L) -> 7L)),
+      ("quarantine query first", Seq(quarantineBatch(0),
+        barBatch(0, 120L, 40L), quarantineBatch(1), barBatch(1, 160L, 7L)),
+        Seq(None -> 0L, Some(120L) -> 40L, Some(120L) -> 40L,
+          Some(160L) -> 7L)))
+    orders.foreach { case (order, events, expected) =>
       val listener = new RunStatusListener
-      events.zip(barRows).zipWithIndex.foreach { case ((e, rows), i) =>
+      events.zip(expected).zipWithIndex.foreach { case ((e, (rows, bars)), i) =>
         listener.onQueryProgress(e)
         val s = listener.snapshot
         assert(s.batchesCompleted == i + 1, order)
         assert(s.stateOperators == rows.toSeq.flatMap(barMetric),
           s"$order, event $i")
+        assert(s.barsInLastBatch == bars, s"$order, event $i")
       }
     }
 
@@ -119,10 +124,10 @@ class RunStatusListenerSpec extends SparkSuite {
     // later progress replacing only its own entry
     val listener = new RunStatusListener
     val other = java.util.UUID.randomUUID()
-    listener.onQueryProgress(barBatch(0, 120L))
+    listener.onQueryProgress(barBatch(0, 120L, 40L))
     listener.onQueryProgress(progress(other, 0L, "2024-01-01T00:00:02.000Z",
       5L, Seq(stateOperator("dedupeWithinWatermark", 5L))))
-    listener.onQueryProgress(barBatch(1, 160L))
+    listener.onQueryProgress(barBatch(1, 160L, 7L))
     assert(listener.snapshot.stateOperators ==
       barMetric(160L) :+ StateMetric("dedupeWithinWatermark", 5L, 0L, 0L, 0L))
   }

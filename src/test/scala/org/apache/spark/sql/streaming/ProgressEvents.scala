@@ -16,9 +16,10 @@ object ProgressEvents {
       rowsRemoved, 0L, 0L, memoryBytes, 0L, 0L, 0L)
 
   /** The progress event of batch `batchId` of query `id`, which read
-    * `inputRows` rows from one source. */
+    * `inputRows` rows from one source and observed `observed`. */
   def progress(id: UUID, batchId: Long, timestamp: String, inputRows: Long,
-      state: Seq[StateOperatorProgress])
+      state: Seq[StateOperatorProgress],
+      observed: Map[String, org.apache.spark.sql.Row] = Map.empty)
       : StreamingQueryListener.QueryProgressEvent =
     new StreamingQueryListener.QueryProgressEvent(
       new StreamingQueryProgress(id, UUID.randomUUID(), null, timestamp,
@@ -27,5 +28,5 @@ object ProgressEvents {
         Array(new SourceProgress("spec source", null, null, null,
           inputRows, 0.0, 0.0)),
         new SinkProgress("spec sink"),
-        Map.empty[String, org.apache.spark.sql.Row].asJava))
+        observed.asJava))
 }
