@@ -1,10 +1,13 @@
 package graft.ops
 
 import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Lifecycle pins for the persisted lexical (BM25) index: persisted
   * serve ≡ the in-memory operator, bootstrap + appends ≡ one-shot
-  * build, and replay idempotence of serve and shard health. */
+  * build, replay idempotence of serve and shard health, and
+  * append-per-micro-batch maintenance from a stream. */
 class LexIndexSpec extends SparkSuite {
   import spark.implicits._
 
@@ -56,5 +59,26 @@ class LexIndexSpec extends SparkSuite {
     // replayed postings do not change the audit (dedup shield)
     LexIndex.append(spark, path, docsAll, "b0")
     assert(rows(LexIndex.healthOf(spark, path)) == clean)
+  }
+
+  test("streaming maintenance converges to the batch build") {
+    // the caller-managed maintenance loop: each micro-batch is one
+    // LexIndex.append keyed by its batch id
+    implicit val sqlCtx = spark.sqlContext
+    val full = docsAll.collect().map(r => (r.getLong(0), r.getString(1)))
+    val path = java.nio.file.Files.createTempDirectory("lexs").toString
+    val input = MemoryStream[(Long, String)]
+    val q = input.toDS().toDF("doc_id", "text").writeStream
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        LexIndex.append(batch.sparkSession, path, batch, s"b$bid")
+      }
+      .start()
+    try {
+      full.grouped(150).foreach { chunk =>
+        input.addData(chunk.toIndexedSeq: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(rows(LexIndex.serve(spark, path)) == rows(Retrieval.bm25(spark, sf())))
   }
 }

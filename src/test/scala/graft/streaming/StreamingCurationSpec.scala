@@ -1,18 +1,64 @@
 package graft.streaming
 
 import graft.SparkSuite
+import graft.ops.{SparkDialect, TextAnalysis, TextFilters}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
-/** Streaming curation ≡ the batch quality-gate + split stages: the
-  * scoring pass is stateless and narrow, so a corpus fed through the
-  * stream equals the batch computation row-for-row. */
+/** The curation fragments the batch relations and the DuckDB oracle
+  * share (`TextAnalysis.scoredSplitExprs`, `TextAnalysis.PiiFamilies`/
+  * `piiRedact`, `TextFilters.gopher*Exprs`) are narrow per-row
+  * projections: applied with `selectExpr` to a stream they keep no
+  * state and add no shuffle, so a corpus fed through Structured
+  * Streaming equals the batch computation row-for-row. */
 class StreamingCurationSpec extends SparkSuite {
   import spark.implicits._
 
+  /** Quality score + split on doc_id / text, keeping score ≥ 0.5. */
+  private def curate(docs: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    docs
+      .selectExpr(("*" +: TextAnalysis.scoredSplitExprs(SparkDialect)): _*)
+      .filter("quality_score >= 0.5")
+  }
+
+  /** Per-family PII counts, then redact (rewrite the text) or drop. */
+  private def piiGate(docs: DataFrame, redact: Boolean = true): DataFrame = {
+    val d = SparkDialect
+    val counts = TextAnalysis.PiiFamilies.map { case (name, pat) =>
+      s"CAST(${d.regexpExtractAllSize("lower(text)", pat)} AS BIGINT) AS $name"
+    }
+    val flagged = docs.selectExpr("*" +: counts: _*)
+      .selectExpr("*",
+        "(n_emails + n_ips + n_ids + n_phones > 0) AS has_pii")
+    if (redact)
+      flagged.withColumn("text", org.apache.spark.sql.functions.expr(
+        s"CASE WHEN has_pii THEN ${TextAnalysis.piiRedact(d, "lower(text)")} " +
+          "ELSE text END"))
+    else flagged.filter("NOT has_pii")
+  }
+
+  /** The Gopher rule battery staged as chained projections, so the
+    * tokenization lands in one materialized column. */
+  private def gopherGate(docs: DataFrame, keepOnly: Boolean = true): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    val d = SparkDialect
+    val rules = TextFilters.gopherRuleExprs(d)
+    val verdicts = docs
+      .selectExpr("*", s"${d.tokens("text")} AS toks")
+      .selectExpr("*" +: TextFilters.gopherCountExprs(d): _*)
+      .selectExpr("*" +: TextFilters.gopherRatioExprs(d): _*)
+      .selectExpr(("*" +: rules.map { case (n, e) => s"$e AS $n" }): _*)
+      .selectExpr("*",
+        s"(${rules.map(_._1).mkString(" AND ")}) AS passes_gopher")
+      .drop("toks", "word_chars", "n_sym", "n_lines", "n_bullet",
+        "n_ellipsis", "n_alpha_words")
+    if (keepOnly) verdicts.filter("passes_gopher") else verdicts
+  }
+
   test("streamed curation equals the batch quality+split computation") {
-    // batch expectation straight from the shared fragments
-    val batch = StreamingCuration.curate(
-      graft.Tables.documents(spark, sf()))
+    val batch = curate(graft.Tables.documents(spark, sf()))
       .select($"doc_id", $"quality_score", $"split")
       .collect().map(r => (r.getLong(0), (r.getDouble(1), r.getString(2))))
       .toMap
@@ -24,8 +70,7 @@ class StreamingCurationSpec extends SparkSuite {
       java.nio.file.Paths.get(sf() + "/documents.parquet"),
       dir.resolve("documents.parquet"))
     val schema = graft.Tables.documents(spark, sf()).schema
-    val q = StreamingCuration.curate(
-      spark.readStream.schema(schema).parquet(dir.toString))
+    val q = curate(spark.readStream.schema(schema).parquet(dir.toString))
       .writeStream.format("memory").queryName("curated_docs")
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
@@ -45,22 +90,19 @@ class StreamingCurationSpec extends SparkSuite {
   }
 
   test("the streaming pass keeps the batch plan shape: no state, no shuffle") {
-    val plan = StreamingCuration.curate(graft.Tables.documents(spark, sf()))
+    val plan = curate(graft.Tables.documents(spark, sf()))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan.take(800))
     assert(!plan.contains("StateStore"), plan.take(800))
   }
 
   test("PII gate redacts or drops on a streamed feed exactly like batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val docs = Seq(
       (1L, "mail me at alice@example.com for the report"),
       (2L, "a perfectly clean document with no identifiers"),
       (3L, "server 10.0.0.7 and ssn 123-45-6789 leaked"))
-    // batch expectations from the same shared fragments
-    val batchRedacted = StreamingCuration.piiGate(
-        docs.toDF("doc_id", "text"), redact = true)
+    val batchRedacted = piiGate(docs.toDF("doc_id", "text"), redact = true)
       .collect().map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[String]("text"), r.getAs[Boolean]("has_pii"))).toMap
     assert(batchRedacted(1L)._2 && batchRedacted(3L)._2 && !batchRedacted(2L)._2)
@@ -70,7 +112,7 @@ class StreamingCurationSpec extends SparkSuite {
     assert(batchRedacted(2L)._1 == docs(1)._2, "clean text passes untouched")
 
     val input = MemoryStream[(Long, String)]
-    val q = StreamingCuration.piiGate(input.toDS().toDF("doc_id", "text"))
+    val q = piiGate(input.toDS().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("pii_gated")
       .outputMode("append").start()
     try {
@@ -83,20 +125,17 @@ class StreamingCurationSpec extends SparkSuite {
     } finally q.stop()
 
     // drop mode removes the flagged docs entirely
-    val dropped = StreamingCuration.piiGate(
-        docs.toDF("doc_id", "text"), redact = false)
+    val dropped = piiGate(docs.toDF("doc_id", "text"), redact = false)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(dropped == Set(2L))
   }
 
   test("gopher gate keeps exactly the batch rule-battery's documents") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     // batch expectation: the oracle-checked relation's verdicts
     graft.functions.GraftFunctions.register(spark)
     graft.Tables.documents(spark, sf()).createOrReplaceTempView("documents")
-    val oracle = spark.sql(
-        graft.ops.TextFilters.gopherRulesSql(graft.ops.SparkDialect))
+    val oracle = spark.sql(TextFilters.gopherRulesSql(SparkDialect))
       .collect().map(r => r.getAs[Long]("doc_id") ->
         r.getAs[Boolean]("passes_gopher")).toMap
     val expectedKept = oracle.filter(_._2).keySet
@@ -107,7 +146,7 @@ class StreamingCurationSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getString(1)))
 
     val input = MemoryStream[(Long, String)]
-    val q = StreamingCuration.gopherGate(input.toDS().toDF("doc_id", "text"))
+    val q = gopherGate(input.toDS().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("gopher_gated")
       .outputMode("append").start()
     try {
@@ -120,37 +159,31 @@ class StreamingCurationSpec extends SparkSuite {
     } finally q.stop()
 
     // audit mode carries every row with its verdicts, matching the
-    // batch relation column-for-column on the rule verdicts
-    val audit = StreamingCuration.gopherGate(
-        fixture.toSeq.toDF("doc_id", "text"), keepOnly = false)
+    // batch relation on the rule verdicts
+    val audit = gopherGate(fixture.toSeq.toDF("doc_id", "text"), keepOnly = false)
       .collect().map(r => r.getAs[Long]("doc_id") ->
         r.getAs[Boolean]("passes_gopher")).toMap
     assert(audit == oracle)
-    // stateless, shuffle-free plan — composable into the curation DAG
-    val plan = StreamingCuration.gopherGate(
-        fixture.toSeq.toDF("doc_id", "text"))
+    val plan = gopherGate(fixture.toSeq.toDF("doc_id", "text"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange") && !plan.contains("StateStore"),
       plan.take(800))
   }
 
   test("rules-then-model chain: gopher gate composes upstream of curate") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val fixture = graft.Tables.documents(spark, sf())
       .select($"doc_id", $"text")
-    // batch expectation: cheap rules first, model scorer on survivors
-    val batchKept = StreamingCuration.curate(
-        StreamingCuration.gopherGate(fixture))
+    // batch expectation: cheap rules first, the quality score on survivors
+    val batchKept = curate(gopherGate(fixture))
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val gopherOnly = StreamingCuration.gopherGate(fixture).count()
+    val gopherOnly = gopherGate(fixture).count()
     assert(batchKept.nonEmpty && batchKept.size < gopherOnly,
       "both gates must bite in the chain")
 
     val rows = fixture.collect().map(r => (r.getLong(0), r.getString(1)))
     val input = MemoryStream[(Long, String)]
-    val q = StreamingCuration.curate(
-        StreamingCuration.gopherGate(input.toDS().toDF("doc_id", "text")))
+    val q = curate(gopherGate(input.toDS().toDF("doc_id", "text")))
       .writeStream.format("memory").queryName("rules_then_model")
       .outputMode("append").start()
     try {
@@ -159,173 +192,6 @@ class StreamingCurationSpec extends SparkSuite {
       val streamed = spark.table("rules_then_model")
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(streamed == batchKept)
-    } finally q.stop()
-  }
-
-  test("surprisal gate scores a stream against the batch-fit model") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def flushTs = new java.sql.Timestamp(t0.getTime + 60L * 86400L * 1000L)
-    val corpus = graft.Tables.documents(spark, sf())
-    val model = StreamingCuration.unigramModel(corpus).cache()
-
-    // batch expectation from the same operator in batch mode, and the
-    // engine-side surprisal for in-vocabulary docs must match the
-    // text_unigram_logprob scoring exactly
-    val stream2batch = corpus
-      .selectExpr("doc_id", "text", s"TIMESTAMP '2024-01-01 00:00:00' AS ingest_ts")
-    val batchScores = StreamingCuration.surprisalGate(
-        stream2batch, model, 0.0, 1e9)
-      .collect().map(r => r.getAs[Long]("doc_id") ->
-        r.getAs[Double]("mean_surprisal")).toMap
-    val opScores = graft.ops.TextAnalysis.unigramLogprob(spark, sf())
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(batchScores == opScores,
-      "gate scoring == text_unigram_logprob on the model's own corpus")
-
-    // streamed: same rows through MemoryStream across 2 batches, plus
-    // an out-of-vocabulary doc that must survive via the OOV floor
-    val rows = corpus.select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), t0, r.getString(1)))
-    val (r1, r2) = rows.splitAt(rows.length / 2)
-    val oov = (9000L, t0, "zzquux glorbnak frumple wibblethorp")
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = StreamingCuration.surprisalGate(
-        input.toDS().toDF("doc_id", "ingest_ts", "text"), model, 0.0, 1e9)
-      .writeStream.format("memory").queryName("surprisal_gated")
-      .outputMode("append").start()
-    try {
-      input.addData(r1.toIndexedSeq: _*); q.processAllAvailable()
-      input.addData((r2 :+ oov).toIndexedSeq: _*); q.processAllAvailable()
-      input.addData(Seq((9001L, flushTs, "flush one"))); q.processAllAvailable()
-      input.addData(Seq((9002L, flushTs, "flush two"))); q.processAllAvailable()
-      val streamed = spark.table("surprisal_gated")
-        .filter($"doc_id" < 9000L)
-        .collect().map(r => r.getAs[Long]("doc_id") ->
-          r.getAs[Double]("mean_surprisal")).toMap
-      assert(streamed == batchScores, "stream == batch scoring")
-      val oovScore = spark.table("surprisal_gated")
-        .filter($"doc_id" === 9000L).collect()
-      assert(oovScore.length == 1 &&
-        oovScore.head.getAs[Double]("mean_surprisal") == 20.0,
-        "OOV doc scores at the floor instead of vanishing")
-    } finally q.stop()
-
-    // the gate genuinely filters: a tight band keeps a strict subset
-    val tight = StreamingCuration.surprisalGate(stream2batch, model,
-        batchScores.values.min, batchScores.values.max * 0.99)
-      .collect()
-    assert(tight.length < batchScores.size && tight.nonEmpty)
-  }
-
-  test("dsir gate keeps exactly the batch sampler's documents") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def flushTs = new java.sql.Timestamp(t0.getTime + 60L * 86400L * 1000L)
-    val corpus = graft.Tables.documents(spark, sf())
-    val (model, oovQ) = StreamingCuration.dsirModel(corpus)
-    val m = model.cache()
-
-    // batch expectation: the weight operator's logratio + the exact
-    // acceptance coin of text_dsir_sample
-    def h60(s: String): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.take(15), 16)
-    }
-    val weights = graft.ops.Retrieval.dsirWeights(spark, sf()).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("dsir_logratio"))
-      .toMap
-    val expKept = weights.filter { case (d, w) =>
-      val pU = math.min(1000000L, math.round(math.exp(w) * 1e6))
-      h60(s"${d}_dsir") % 1000000L < pU
-    }
-
-    val rows = corpus.select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), t0, r.getString(1)))
-    val (r1, r2) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = StreamingCuration.dsirGate(
-        input.toDS().toDF("doc_id", "ingest_ts", "text"), m, oovQ)
-      .writeStream.format("memory").queryName("dsir_gated")
-      .outputMode("append").start()
-    try {
-      input.addData(r1.toIndexedSeq: _*); q.processAllAvailable()
-      input.addData(r2.toIndexedSeq: _*); q.processAllAvailable()
-      input.addData(Seq((9001L, flushTs, "flush one"))); q.processAllAvailable()
-      input.addData(Seq((9002L, flushTs, "flush two"))); q.processAllAvailable()
-      val streamed = spark.table("dsir_gated")
-        .filter($"doc_id" < 9000L)
-        .collect().map(r => r.getAs[Long]("doc_id") ->
-          r.getAs[Double]("dsir_logratio")).toMap
-      assert(streamed.keySet == expKept.keySet, "kept set == batch sampler")
-      // and the reported logratio is the weight operator's, exactly
-      streamed.foreach { case (d, w) =>
-        assert(math.abs(w - weights(d)) < 1e-9, s"doc $d")
-      }
-    } finally q.stop()
-  }
-
-  test("classifier gate keeps exactly the frozen model's above-threshold documents") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def flushTs = new java.sql.Timestamp(t0.getTime + 60L * 86400L * 1000L)
-    val corpus = graft.Tables.documents(spark, sf())
-    val model = graft.ops.Retrieval.clfModel(corpus).cache()
-
-    // batch expectation: score every doc with the SAME frozen weights
-    // in plain Scala (integer sum + µ-quantized sigmoid, HALF_UP)
-    def h60(s: String): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.take(15), 16)
-    }
-    val w = model.collect()
-      .map(r => r.getAs[Long]("fb") -> r.getAs[Long]("w_u")).toMap
-    val b = graft.ops.Retrieval.DsirBuckets
-    corpus.createOrReplaceTempView("documents")
-    val toks = spark.sql(
-        "SELECT doc_id, graft_tokens(text) AS t FROM documents")
-      .collect().map(r => r.getAs[Long]("doc_id") -> r.getSeq[String](1))
-    val pUs = toks.filter(_._2.nonEmpty).map { case (d, ts) =>
-      val sU = ts.map(t => w.getOrElse(h60(t) % b, 0L)).sum
-      d -> BigDecimal(1e6 / (1.0 + math.exp(-(sU.toDouble / (ts.size * 1e6)))))
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-    }
-    // a mid-distribution operating point so BOTH gate branches are
-    // exercised on this weak-feature fixture (see clfGate's scaladoc:
-    // at the default 0.5 every doc here sits below the bar)
-    val thrU = (pUs.map(_._2).min + pUs.map(_._2).max) / 2
-    val expKept = pUs.filter(_._2 > thrU).toMap
-    assert(expKept.nonEmpty && expKept.size < pUs.size,
-      "threshold must split the corpus")
-
-    val rows = corpus.select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), t0, r.getString(1)))
-    val (r1, r2) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = StreamingCuration.clfGate(
-        input.toDS().toDF("doc_id", "ingest_ts", "text"), model, thrU)
-      .writeStream.format("memory").queryName("clf_gated")
-      .outputMode("append").start()
-    try {
-      input.addData(r1.toIndexedSeq: _*); q.processAllAvailable()
-      input.addData(r2.toIndexedSeq: _*); q.processAllAvailable()
-      input.addData(Seq((9001L, flushTs, "flush one"))); q.processAllAvailable()
-      input.addData(Seq((9002L, flushTs, "flush two"))); q.processAllAvailable()
-      val streamed = spark.table("clf_gated")
-        .filter($"doc_id" < 9000L)
-        .collect().map(r => r.getAs[Long]("doc_id") ->
-          r.getAs[Double]("clf_prob")).toMap
-      assert(streamed.nonEmpty, "gate must keep some documents")
-      assert(streamed.keySet == expKept.keySet,
-        "kept set == frozen-model batch scorer")
-      streamed.foreach { case (d, p) =>
-        assert(math.abs(p - expKept(d) / 1e6) < 1e-9, s"doc $d")
-      }
     } finally q.stop()
   }
 }

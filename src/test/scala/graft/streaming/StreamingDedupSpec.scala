@@ -2,18 +2,35 @@ package graft.streaming
 
 import java.sql.Timestamp
 import graft.SparkSuite
+import graft.ops.SparkDialect
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.expr
 
-/** Streaming dedup ≡ batch dedup: first occurrence passes, duplicates
-  * drop within and across micro-batches; state is digest-keyed. */
+/** Exact dedup's content digest (`Dedup.exactSql`'s md5 over
+  * whitespace-collapsed lowercase text) as the key of a watermarked
+  * stream dedup: first occurrence passes, duplicates drop within and
+  * across micro-batches and across a checkpointed restart, and the
+  * kept set matches the batch operator's keepers. */
 class StreamingDedupSpec extends SparkSuite {
   import spark.implicits._
+
+  /** The normalization `Dedup.exactSql` digests. */
+  private val digest =
+    s"md5(${SparkDialect.reReplace("trim(lower(text))", "\\s+", " ")})"
+
+  /** docs carry (doc_id, ingest_ts, text); emits first-seen rows. */
+  private def dedupDocs(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("digest", expr(digest))
+      .withWatermark("ingest_ts", "30 days")
+      .dropDuplicatesWithinWatermark("digest")
 
   test("drops duplicate documents within and across batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp, String)]
     val docs = input.toDS().toDF("doc_id", "ingest_ts", "text")
-    val q = StreamingDedup.dedupDocs(docs)
+    val q = dedupDocs(docs)
       .writeStream.format("memory").queryName("dedup_docs")
       .outputMode("append").start()
     try {
@@ -47,7 +64,7 @@ class StreamingDedupSpec extends SparkSuite {
       rows.toDF("doc_id", "ingest_ts", "text")
         .write.mode("append").parquet(src)
     def drain(): Unit = {
-      val q = StreamingDedup.dedupDocs(
+      val q = dedupDocs(
         spark.readStream.schema("doc_id LONG, ingest_ts TIMESTAMP, text STRING")
           .parquet(src))
         .writeStream.format("parquet").option("path", out)
@@ -55,7 +72,8 @@ class StreamingDedupSpec extends SparkSuite {
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination(120000)
+      try assert(q.awaitTermination(120000), "stream did not finish in time")
+      finally q.stop()
     }
     writeBatch(Seq((1L, t, "alpha doc"), (2L, t, "beta doc")))
     drain()
@@ -75,22 +93,28 @@ class StreamingDedupSpec extends SparkSuite {
       .map(r => (r.getLong(0), Timestamp.valueOf("2024-01-01 00:00:00"),
         r.getString(1)))
     val input = MemoryStream[(Long, Timestamp, String)]
-    val q = StreamingDedup.dedupDocs(
-      input.toDS().toDF("doc_id", "ingest_ts", "text"))
+    val q = dedupDocs(input.toDS().toDF("doc_id", "ingest_ts", "text"))
       .writeStream.format("memory").queryName("dedup_corpus")
       .outputMode("append").start()
     try {
-      // feed in two chunks to cross a batch boundary
+      // feed in two chunks to cross a batch boundary; the second also
+      // re-sends the first 50 documents under new ids with their
+      // whitespace widened, which the digest normalizes away
       val (a, b) = corpus.splitAt(corpus.length / 2)
+      val resent = a.take(50).map { case (id, t, text) =>
+        (id + 100000L, t, "  " + text.replace(" ", "   ") + " ")
+      }
       input.addData(a.toIndexedSeq); q.processAllAvailable()
-      input.addData(b.toIndexedSeq); q.processAllAvailable()
-      val streamedDigests = spark.table("dedup_corpus")
-        .select("digest").collect().map(_.getString(0)).sorted.toSeq
-      val batchDigests = graft.ops.Dedup.exact(spark, sf())
+      input.addData((b ++ resent).toIndexedSeq); q.processAllAvailable()
+      val streamed = spark.table("dedup_corpus")
+        .select("doc_id").collect().map(_.getLong(0)).toSeq
+      // the batch keepers: each digest group's representative
+      val keepers = graft.ops.Dedup.exact(spark, sf())
         .filter(!$"is_duplicate")
-        .collect().map(_.getLong(0)) // rep doc_ids
-      assert(streamedDigests.length == batchDigests.length)
-      assert(streamedDigests.distinct.length == streamedDigests.length)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(keepers.nonEmpty)
+      assert(streamed.length == keepers.size)
+      assert(streamed.toSet == keepers)
     } finally q.stop()
   }
 }
