@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.model.Timeframes
 
 /** The reference's E1 dataflow re-expressed as declarative Spark batch
   * operators over the `events` fixture stream (SURVEY.md §3 E1):
@@ -46,21 +47,11 @@ object BarPipeline {
   /** T5: tumbling-window OHLCV bar construction from ticks.
     * open/close are min_by/max_by on the event timestamp — true
     * time-ordered first/last, not positional (SURVEY §2.4 A1 note).
-    * Deterministic because (symbol, ts) is unique in the fixtures. */
-  /** `date_trunc` unit of a timeframe label — shared by bar bucketing
-    * and the incremental cutoff so the two can never disagree on
-    * where a bucket starts. */
-  private[ingest] def truncUnit(timeframe: String): String = timeframe match {
-    case "Day"    => "day"
-    case "Hour"   => "hour"
-    case "Minute" => "minute"
-    case "Week"   => "week"
-    case "Month"  => "month"
-    case other    => throw new IllegalArgumentException(s"timeframe $other")
-  }
-
+    * Deterministic because (symbol, ts) is unique in the fixtures.
+    * The bucket is the label's `date_trunc` unit (`Timeframes`, the
+    * policy the streaming path shares). */
   def barsFromTicks(events: DataFrame, timeframe: String = "Day"): DataFrame = {
-    val bucket = date_trunc(truncUnit(timeframe), col("ts"))
+    val bucket = date_trunc(Timeframes.unit(timeframe), col("ts"))
     events
       .filter(col("event_type").isNotNull) // P5
       .groupBy(col("event_type").as("symbol"), bucket.as("t"))
@@ -72,11 +63,14 @@ object BarPipeline {
         count(lit(1)).as("v"))
   }
 
-  /** Raw bars → canonical schema (never None here: `t` is present). */
+  /** Raw bars → canonical schema (never None here: `t` is present),
+    * under the resolved timeframe label (F8). */
   def canonicalBars(spark: SparkSession, dir: String,
-      timeframe: String = "Day"): DataFrame =
+      timeframe: String = "Day"): DataFrame = {
+    val tf = Timeframes.resolve(timeframe)
     Canonicalize.canonicalize(
-      barsFromTicks(Tables.events(spark, dir), timeframe), timeframe).get
+      barsFromTicks(Tables.events(spark, dir), tf), tf).get
+  }
 
   /** T3: the overlapping-refetch + idempotent-upsert dedup semantics.
     * Two overlapping trailing windows are re-fetched and unioned; the
@@ -103,99 +97,6 @@ object BarPipeline {
         $"bar.timeframe".as("timeframe"), $"bar.open".as("open"),
         $"bar.high".as("high"), $"bar.low".as("low"),
         $"bar.close".as("close"), $"bar.volume".as("volume"))
-  }
-
-  /** Incremental re-ingest with a per-asset high-water mark: instead of
-    * re-fetching the whole trailing window every run (`overlappingIngest`
-    * — the reference's own full-refetch shape, `app/alpaca_service.py:
-    * 117-118`), read the store's max ingested bar timestamp per asset
-    * and scan only the tick tail that can still produce new or changed
-    * bars.
-    *
-    * Two-level pruning, both scale-critical at 100 TB:
-    *  - the MINIMUM high-water mark across assets (one collected scalar,
-    *    like the k-means codebook) becomes a LITERAL `ts >=` predicate,
-    *    so it reaches the source scan as a pushed filter / partition
-    *    prune — the second run's scan is a strict subset of the first;
-    *  - a broadcast join against the (tiny, one row per asset) watermark
-    *    relation then trims each asset to its OWN tail, so one lagging
-    *    asset doesn't inflate every other asset's re-read beyond the
-    *    scan that the global cutoff admitted.
-    *
-    * Bar timestamps are bucket starts, so each per-asset cutoff
-    * (`hwm − overlapDays`) stays on a bucket boundary: every recomputed
-    * bucket sees ALL of its ticks, never a partial suffix — the
-    * recomputed bars are bit-identical to a full-history run over those
-    * days (IncrementalIngestSpec pins store ≡ one-shot ingest).
-    * `overlapDays` absorbs late ticks inside already-ingested buckets
-    * (the reference's overlap-refetch semantics); the key-level
-    * `BarStore.merge` makes re-landing the overlap idempotent.
-    *
-    * Symbols absent from the store (new listings) have no watermark and
-    * need their FULL history — which no single ts-pruned scan can
-    * deliver — so they bootstrap through a separate anti-join branch
-    * with no time bound.  On a stable catalog that branch produces zero
-    * rows; pipelines whose catalog cannot grow between runs set
-    * `newSymbolBootstrap = false` and skip its scan entirely (at the
-    * 100 TB layout the tick source is partitioned by symbol, so the
-    * anti branch prunes to the new symbols' directories anyway).
-    * Returns the merged tail bars. */
-  def incrementalIngest(events: DataFrame, storePath: String,
-      overlapDays: Int = 1, timeframe: String = "Day",
-      newSymbolBootstrap: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, min => fmin}
-    val spark = events.sparkSession
-    val hPath = new org.apache.hadoop.fs.Path(storePath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // bootstrap on a missing OR empty path (a just-created directory is
-    // not a store), not merely a missing one
-    if (!fs.exists(hPath) || fs.listStatus(hPath).isEmpty) {
-      val bars = Canonicalize
-        .canonicalize(barsFromTicks(events, timeframe), timeframe).get
-      BarStore.upsert(bars, storePath)
-      bars
-    } else {
-      // materialize the tail BEFORE merging: the tail's plan reads the
-      // store (for the watermark) that the merge is about to rewrite,
-      // so the returned frame must not re-execute that lineage
-      val bars = incrementalTail(events, BarStore.read(spark, storePath),
-        overlapDays, timeframe, newSymbolBootstrap).localCheckpoint(true)
-      BarStore.merge(bars, storePath)
-      bars
-    }
-  }
-
-  /** The pure (lazy) tail plan of `incrementalIngest`, split out so its
-    * shape can be asserted before any merge executes: per-asset
-    * watermark agg → literal global cutoff (pushed into the scan) →
-    * broadcast per-asset trim → optional new-symbol anti branch →
-    * canonical bars. */
-  private[ingest] def incrementalTail(events: DataFrame, store: DataFrame,
-      overlapDays: Int, timeframe: String,
-      newSymbolBootstrap: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, min => fmin}
-    // Snap the cutoff to a BUCKET boundary of the configured
-    // timeframe: `max(timestamp) - overlapDays` lands mid-bucket for
-    // Week/Month (Monday − 1 day is Sunday of the previous week), and
-    // a bar recomputed from a partial tick suffix would silently
-    // overwrite the correct stored bar via the newer-wins merge.
-    // Truncating to the bucket start makes every recomputed bucket
-    // complete; for Day/Hour/Minute the truncation is a no-op.
-    val hwm = store
-      .groupBy(col("symbol"))
-      .agg(date_trunc(truncUnit(timeframe),
-        date_sub(max(col("timestamp")), overlapDays)).as("cutoff"))
-    val globalCutoff = hwm.agg(fmin(col("cutoff"))).head.getTimestamp(0)
-    val known = events
-      .filter(col("ts") >= lit(globalCutoff))
-      .join(broadcast(hwm), events("event_type") === hwm("symbol"))
-      .filter(col("ts") >= col("cutoff"))
-      .drop("symbol", "cutoff")
-    val tail =
-      if (!newSymbolBootstrap) known
-      else known.unionByName(events.join(broadcast(hwm),
-        events("event_type") === hwm("symbol"), "left_anti"))
-    Canonicalize.canonicalize(barsFromTicks(tail, timeframe), timeframe).get
   }
 
   /** A1+F2: per-asset ingest summary — true min/max of the batch window

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions.lit
   *
   * The reference publishes one `HistoricalDataUpdated` message per
   * asset per run to Pub/Sub (`app/alpaca_service.py:183-258`); the
-  * engine's default sink is a dated JSON append (queryable, vacuumable
-  * — SURVEY §2.1 sanctions parquet/JSON as the Pub/Sub stand-in).
+  * engine's default sink is a dated JSON append (queryable, capture-
+  * date partitioned — SURVEY §2.1 sanctions parquet/JSON as the
+  * Pub/Sub stand-in).
   * This trait makes the destination swappable without touching any
   * connector mechanics: `StreamingIngest.start` publishes through it
   * after each successful store write, exactly as before.

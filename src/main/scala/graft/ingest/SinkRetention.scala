@@ -1,38 +1,24 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-/** Age-gated retention for the append-only side sinks (event-summary
-  * JSON, quarantine parquet): under streaming these accumulate one
-  * batch of files per trigger forever — unlike the bar store, whose
-  * r9 retention/compaction lifecycle covers only `bar_date=`
-  * partitioned bar tables.
-  *
-  * The move is `BarStore.vacuum`'s: partition the sink by a capture
-  * date at write time (`appendDated` stamps `sink_date` — a SINK-
-  * BOUNDARY server timestamp, the F7 pattern; retention is an
-  * operational property of when rows landed, not of event time), then
-  * drop whole partitions strictly older than the horizon.  Dropping a
-  * directory is atomic from a reader's perspective in the same sense
-  * as the bar-store vacuum: a pruned reader (`sink_date >= horizon`)
-  * never lists the dropped dirs; an unpruned reader racing the vacuum
-  * sees an old or a new listing of each partition, never a partial
-  * file set (file-level deletes happen inside a dir that pruned
-  * readers no longer visit, and whole-partition removal is one
-  * recursive delete of a dir no longer listed).
+/** Capture-date layout for the append-only side sinks (event-summary
+  * JSON, quarantine parquet), which under streaming gain one batch of
+  * files per trigger.  `appendDated` stamps each row with `sink_date`,
+  * a SINK-BOUNDARY server date (the F7 pattern: when rows landed, not
+  * their event time), and partitions the sink by it, so a reader
+  * prunes to the capture dates it wants and an operator can retire
+  * old dates a whole directory at a time.
   *
   * These sinks are written via `foreachBatch` appends (no streaming
   * file-sink `_spark_metadata` log), so directory listing IS the read
-  * path and partition drops cannot orphan a manifest.  At-least-once
-  * appends carry `batch_id` for downstream dedup; the quarantine is a
-  * monitoring copy, where duplicate rows are benign and silent loss
-  * is not. */
+  * path.  At-least-once appends carry `batch_id` for downstream dedup;
+  * the quarantine is a monitoring copy, where duplicate rows are
+  * benign and silent loss is not. */
 object SinkRetention {
 
   val DateCol = "sink_date"
-
-  private val PartRx = s"^$DateCol=(\\d{4}-\\d{2}-\\d{2})$$".r
 
   /** Append `df` to `path` partitioned by the capture date.
     *
@@ -58,27 +44,5 @@ object SinkRetention {
     df.withColumn(DateCol, current_date())
       .write.mode(SaveMode.Append).partitionBy(DateCol)
       .format(format).save(path)
-  }
-
-  /** Drop `sink_date=` partitions strictly older than `olderThan`.
-    * Returns the dropped partition names; absent paths and foreign
-    * (non-dated) directories are left untouched. */
-  def vacuum(spark: SparkSession, path: String,
-             olderThan: java.sql.Date): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    Option(fs.listStatus(p)).getOrElse(Array.empty).toSeq
-      .filter(_.isDirectory)
-      .flatMap { d =>
-        PartRx.findFirstMatchIn(d.getPath.getName).flatMap { m =>
-          val dt = java.sql.Date.valueOf(m.group(1))
-          if (dt.before(olderThan)) {
-            fs.delete(d.getPath, true)
-            Some(d.getPath.getName)
-          } else None
-        }
-      }
-      .sorted
   }
 }

@@ -48,13 +48,26 @@ final case class RunStatus(
     errorMessage: Option[String])
 
 object Timeframes {
-  /** Valid timeframe labels (T5).  Buckets are calendar `date_trunc`
-    * units (lowercased label), NOT fixed window durations — epoch-
-    * aligned `window()` durations diverge from calendar weeks/months
-    * (see StreamingIngest.streamingBars). */
-  val valid: Set[String] = Set("Minute", "Hour", "Day", "Week", "Month")
+  /** The one timeframe policy of both bar paths.  Each valid label
+    * (T5) with its longest bucket in minutes.  Buckets are calendar
+    * `date_trunc` units (lowercased label), NOT fixed window durations
+    * — epoch-aligned `window()` durations diverge from calendar
+    * weeks/months (see StreamingIngest.streamingBars). */
+  private val bucketMinutesOf: Map[String, Long] = Map(
+    "Minute" -> 1L, "Hour" -> 60L, "Day" -> 1440L,
+    "Week" -> 7L * 1440L, "Month" -> 31L * 1440L)
 
-  /** Reference behavior (F8, `app/config.py:62-71`): warn + default to
-    * Day on an invalid timeframe string rather than failing. */
+  val valid: Set[String] = bucketMinutesOf.keySet
+
+  /** Reference behavior (F8, `app/config.py:62-71`): default to Day on
+    * an invalid timeframe string rather than failing.  Each bar entry
+    * point resolves its label once; the resolved label is what lands
+    * in `bar_key` and `timeframe`. */
   def resolve(s: String): String = if (valid.contains(s)) s else "Day"
+
+  /** `date_trunc` unit of a label's bucket. */
+  def unit(label: String): String = resolve(label).toLowerCase
+
+  /** Length of a label's longest bucket, in minutes. */
+  def bucketMinutes(label: String): Long = bucketMinutesOf(resolve(label))
 }

@@ -1541,15 +1541,13 @@ object Similarity {
       .select($"vec_id", $"cid",
         expr(SparkDialect.toDoubleArr("embedding")).as("nv"))
       .withColumn("nn", expr("sqrt(graft_dot(nv, nv))"))
-    val cand = lists.join(broadcast(probe), "cid")
+    // candidates are distinct on (qid, nid), so ranking needs no dedup:
+    // every store writer gives each row of the vec_id-keyed embeddings
+    // one rank-1 `cid` (`assignedCid`), and a query's probed cids are
+    // distinct (`probeCids`)
+    lists.join(broadcast(probe), "cid")
       .filter($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("nid"), $"nv", $"nn")
-      // a list that holds a row twice (a replayed or retried write)
-      // must not rank it twice: dedup by id before ranking so a
-      // duplicate can never occupy two ranks and push a genuine
-      // neighbor out of the top-k
-      .dropDuplicates("qid", "nid")
-    cand
       .join(broadcast(queries), "qid")
       .select($"qid", $"nid",
         expr("graft_dot(qv, nv)").divide($"qn" * $"nn").as("cs"))
@@ -1954,10 +1952,10 @@ object Similarity {
       .select($"vec_id", $"cid",
         expr(SparkDialect.toDoubleArr("embedding")).as("nv"))
       .withColumn("nn", expr("sqrt(graft_dot(nv, nv))"))
+    // distinct on (qid, nid), so no dedup, as in `servePersisted`
     lists.join(broadcast(probe), "cid")
       .filter($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("nid"), $"nv", $"nn")
-      .dropDuplicates("qid", "nid")
       .join(broadcast(queries), "qid")
       .select($"qid", $"nid",
         round(expr("graft_dot(qv, nv)").divide($"qn" * $"nn"), 6).as("cs"))
@@ -2136,13 +2134,10 @@ object Similarity {
         "nrm DOUBLE, cid BIGINT")
       .parquet(store.toString)
       .filter($"cid".isin(probedCids: _*))
-    val cand = lists.join(broadcast(probe), "cid")
+    // distinct on (qid, nid), so no dedup, as in `servePersisted`
+    lists.join(broadcast(probe), "cid")
       .filter($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("nid"), $"code", $"scale", $"nrm")
-      // same replay tolerance as servePersisted: a duplicate row must
-      // never occupy two ranks
-      .dropDuplicates("qid", "nid")
-    cand
       .join(broadcast(queries), "qid")
       .select($"qid", $"nid",
         expr("graft_dot(CAST(qcode AS ARRAY<DOUBLE>), " +

@@ -32,10 +32,13 @@ import graft.streaming.RunStatusListener
   *
   * Which endpoints run Spark: only `/snapshot` (with each `/events`
   * push, which carries its payload) and `/summaries`, because they
-  * read the bar store.  `/`, `/state_metrics` and the status part of
-  * `/snapshot` read the listener's in-memory snapshot once per request
-  * and format it with `RunStatusListener.statusJson`/`stateMetricsJson`
-  * (the bytes `statusDf`/`stateMetricsDf`'s `toJSON` would give), so
+  * read the bar store.  They read under `BarStore.reading`, so a
+  * scheduled run's merge in this JVM waits for them and they never
+  * list a partition the merge is replacing.  `/`, `/state_metrics`
+  * and the status part of `/snapshot` read the listener's in-memory
+  * snapshot once per request and format it with
+  * `RunStatusListener.statusJson`/`stateMetricsJson` (the bytes
+  * `statusDf`/`stateMetricsDf`'s `toJSON` would give), so
   * a health check runs no job and never queues behind the ingest's
   * jobs.  The state metrics are true per-batch counts: the ingest
   * evaluates each micro-batch once.
@@ -168,16 +171,12 @@ final class StatusServer(spark: SparkSession, storeDir: String,
   /** Full connect-push payload: status + the store's bars (capped). */
   private def snapshotJson(): String = {
     val status = RunStatusListener.statusJson(listener.snapshot)
-    val exists = {
-      val p = new org.apache.hadoop.fs.Path(storeDir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    val bars =
-      if (!exists) Array.empty[String]
-      else BarStore.read(spark, storeDir)
+    val bars = readStore {
+      BarStore.read(spark, storeDir)
         .orderBy("symbol", "timestamp")
         .limit(snapshotLimit + 1)
         .toJSON.collect()
+    }
     val truncated = bars.length > snapshotLimit
     val kept = if (truncated) bars.take(snapshotLimit) else bars
     s"""{"status":$status,"bars_count":${kept.length},""" +
@@ -193,17 +192,19 @@ final class StatusServer(spark: SparkSession, storeDir: String,
       .mkString("{\"state_operators\":[", ",", "]}")
 
   /** Per-asset ingest summary over the live store (A1 shape). */
-  private def summariesJson(): String = {
-    val exists = {
-      val p = new org.apache.hadoop.fs.Path(storeDir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    val rows =
-      if (!exists) Array.empty[String]
-      else graft.ingest.BarPipeline
+  private def summariesJson(): String =
+    readStore {
+      graft.ingest.BarPipeline
         .ingestSummaries(BarStore.read(spark, storeDir))
         .orderBy("asset_symbol", "timeframe")
         .toJSON.collect()
-    rows.mkString("{\"summaries\":[", ",", "]}")
-  }
+    }.mkString("{\"summaries\":[", ",", "]}")
+
+  /** A store read under the store's read lock, so an in-process
+    * `BarStore.merge` never rewrites a partition the read lists; no
+    * rows when the store is absent (`BarStore.exists`). */
+  private def readStore(rows: => Array[String]): Array[String] =
+    BarStore.reading(spark, storeDir) {
+      if (BarStore.exists(spark, storeDir)) rows else Array.empty
+    }
 }

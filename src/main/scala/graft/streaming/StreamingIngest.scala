@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.ingest.{BarStore, Canonicalize, Quarantine}
+import graft.model.Timeframes
 
 /** The E1 dataflow under Structured Streaming (SURVEY.md §2.7 T1-T6).
   *
@@ -14,9 +15,10 @@ import graft.ingest.{BarStore, Canonicalize, Quarantine}
   * canonicalize.  Sink: `foreachBatch` keyed idempotent upsert into the
   * partitioned bar store (T3) — the same BarStore as batch mode, so
   * streaming and batch ingests are interchangeable and re-runs are
-  * no-ops.  Trigger: `AvailableNow` reproduces the reference's
-  * scheduled batch cadence (cron fires a run that drains what's
-  * available); `ProcessingTime` maps to its interval mode.
+  * no-ops.  Trigger: `AvailableNow` reproduces one run of the
+  * reference's scheduled cadence (cron fires a run that drains what's
+  * available); its interval and cron modes are `graft.Serve.runLoop`
+  * firing such runs.
   *
   * Scale: state is bounded by the watermark (T4 — the reference's
   * 30-day trailing refetch window); the windowed agg shuffles once on
@@ -49,16 +51,11 @@ object StreamingIngest {
     * at micros precision, identical to the batch loader.
     *
     * A stream started on an EMPTY directory has nothing to probe, and
-    * a file stream cannot change schema after start — the format is
-    * pinned for the stream's lifetime.  `tsFormat` makes that pin
-    * explicit: "auto" (probe, falling back to the nanos-Long raw
-    * schema when the dir is empty — the standing fixture generation),
-    * or "nanos"/"micros" to declare the expected generation up front.
-    * A caller whose producer writes the NTZ-micros generation into a
-    * not-yet-populated dir MUST pass "micros", or the first arriving
-    * file fails the pinned Long reader at micro-batch time. */
-  def readEvents(spark: SparkSession, dir: String,
-                 tsFormat: String = "auto"): DataFrame = {
+    * a file stream cannot change schema after start, so it falls back
+    * to the nanos-Long raw schema (the standing fixture generation).
+    * Every `Serve.runOnce` starts a new stream and so probes again: a
+    * run that finds NTZ-micros files is read as such. */
+  def readEvents(spark: SparkSession, dir: String): DataFrame = {
     // Same fail-fast guard as Tables.events: on a session not built via
     // GraftSession/Verify a nanos-format stream would otherwise die at
     // start with an opaque Spark nanos-timestamp error.
@@ -66,22 +63,10 @@ object StreamingIngest {
       spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true",
       "session must set spark.sql.legacy.parquet.nanosAsLong=true " +
         "(GraftSession.build does) - events*.parquet may be TIMESTAMP(NANOS)")
-    val ntzSchema = StructType(eventSchema.map(f =>
-      if (f.name == "ts")
-        f.copy(dataType = org.apache.spark.sql.types.TimestampNTZType)
-      else f))
-    val schema = tsFormat match {
-      case "nanos" => eventSchema
-      case "micros" => ntzSchema
-      case "auto" =>
-        val probed =
-          try Some(spark.read.option("pathGlobFilter", "events*.parquet")
-                .parquet(dir).schema)
-          catch { case _: Exception => None } // empty dir: starts before files
-        probed.getOrElse(eventSchema)
-      case other => throw new IllegalArgumentException(
-        s"tsFormat must be auto|nanos|micros, got '$other'")
-    }
+    val schema =
+      try spark.read.option("pathGlobFilter", "events*.parquet")
+        .parquet(dir).schema
+      catch { case _: Exception => eventSchema } // empty dir: starts before files
     val raw = spark.readStream
       .schema(schema)
       .option("pathGlobFilter", "events*.parquet")
@@ -108,42 +93,18 @@ object StreamingIngest {
     * (one state row per symbol × bucket, evicted once the watermark
     * passes the bucket start + the late horizon).
     *
-    * The eviction delay is the caller's horizon PLUS one bucket
-    * length: truncation moves an event's time back by up to a bucket,
-    * so without the slack a previous-Month bucket could close the
-    * moment the new month starts — any event the ts-based horizon
-    * would accept (ts ≥ max(ts) − horizon) is then still accepted,
-    * because bucket(ts) ≥ ts − bucketLen. */
-  def streamingBars(events: DataFrame, timeframe: String = "Day",
-      watermark: String = "30 days"): DataFrame = {
-    val unit = graft.model.Timeframes.resolve(timeframe).toLowerCase
-    val slackMinutes: Long = unit match {
-      case "minute" => 1L
-      case "hour" => 60L
-      case "day" => 1440L
-      case "week" => 7L * 1440L
-      case "month" => 31L * 1440L
-      case _ => 1440L
-    }
-    // normalize the horizon to minutes so any common interval spelling
-    // ("30 days", "30 DAYS", "720 hours", "4 weeks") gets the slack;
-    // unrecognized forms pass through unchanged (caller manages slack)
-    val interval = "(?i)^\\s*(\\d+)\\s*(minute|hour|day|week)s?\\s*$".r
-    val delay = watermark match {
-      case interval(n, u) =>
-        val unitMin = u.toLowerCase match {
-          case "minute" => 1L
-          case "hour" => 60L
-          case "day" => 1440L
-          case "week" => 7L * 1440L
-        }
-        s"${n.toLong * unitMin + slackMinutes} minutes"
-      case _ => watermark
-    }
+    * The eviction delay is the horizon PLUS one bucket length
+    * (`Timeframes.bucketMinutes`): truncation moves an event's time
+    * back by up to a bucket, so without the slack a previous-Month
+    * bucket could close the moment the new month starts — any event
+    * the ts-based horizon would accept (ts ≥ max(ts) − horizon) is
+    * then still accepted, because bucket(ts) ≥ ts − bucketLen. */
+  def streamingBars(events: DataFrame, timeframe: String = "Day"): DataFrame = {
+    val delayMinutes = 30L * 1440L + Timeframes.bucketMinutes(timeframe)
     events
       .filter(col("event_type").isNotNull) // P5
-      .withColumn("bucket", date_trunc(unit, col("ts")))
-      .withWatermark("bucket", delay)
+      .withColumn("bucket", date_trunc(Timeframes.unit(timeframe), col("ts")))
+      .withWatermark("bucket", s"$delayMinutes minutes")
       .groupBy(col("event_type").as("symbol"), col("bucket"))
       .agg(
         min_by(col("value"), col("ts")).as("o"),
@@ -154,16 +115,6 @@ object StreamingIngest {
       .select(col("symbol"), col("bucket").as("t"),
         col("o"), col("h"), col("l"), col("c"), col("v"))
   }
-
-  /** T3 inside the stream: watermark-bounded key dedup.  The sink-side
-    * upsert already makes duplicates harmless; this drops exact
-    * duplicate bar updates *before* they reach the sink, with state
-    * bounded by the watermark instead of growing forever — the
-    * streaming form of the reference's deterministic-doc-id dedup. */
-  def dedupedBars(bars: DataFrame, watermark: String = "30 days"): DataFrame =
-    bars
-      .withWatermark("t", watermark)
-      .dropDuplicatesWithinWatermark("symbol", "t")
 
   /** Full streaming ingest: source → bars → canonicalize → upsert →
     * per-asset summary events (S5).  Update mode + keyed upsert sink =
@@ -183,12 +134,10 @@ object StreamingIngest {
     * event is isolated without failing (or even touching) the bar
     * batch.  All three quarantine outputs and the summary feed are
     * `SinkRetention.appendDated` sinks (capture-date partitioned, no
-    * file-sink manifest), so `SinkRetention.vacuum` gives every side
-    * sink the same age-gated retention the bar store has.  It is a
-    * separate query because the rejects must be captured at raw-event
-    * granularity, BEFORE the stateful window aggregation that the main
-    * query's foreachBatch sees; both drain under the same trigger (for
-    * `AvailableNow` the spec awaits both).
+    * file-sink manifest).  It is a separate query because the
+    * rejects must be captured at raw-event granularity, BEFORE the
+    * stateful window aggregation that the main query's foreachBatch
+    * sees; both drain under the same trigger, and callers await both.
     * Inside foreachBatch, aggregated rows that `Canonicalize` would
     * silently drop (null bucket) are likewise quarantined to
     * `quarantineDir`/bars instead of vanishing — these are per-micro-
@@ -200,6 +149,14 @@ object StreamingIngest {
     * batch (missing timestamp column — a structurally different
     * schema) goes to `quarantineDir`/bars_structural rather than
     * throwing, so one malformed batch can never kill the query.
+    *
+    * The timeframe label is resolved once here (`Timeframes.resolve`,
+    * F8): the bars' buckets, watermark and `bar_key`/`timeframe`
+    * columns all follow the resolved label, as in the batch path.
+    *
+    * Both queries run under `Trigger.AvailableNow`: a call drains what
+    * the source holds and stops, so callers await termination.  Serve's
+    * scheduler fires one call per run.
     *
     * Both queries start from one `readEvents` stream (one schema probe
     * per call); each still gets its own source and checkpoint.
@@ -236,7 +193,6 @@ object StreamingIngest {
     * nobody can see. */
   def start(spark: SparkSession, srcDir: String, storeDir: String,
       checkpointDir: String, timeframe: String = "Day",
-      trigger: Trigger = Trigger.AvailableNow(),
       eventsDir: Option[String] = None,
       quarantineDir: Option[String] = None,
       eventSink: Option[graft.ingest.EventSink] = None)
@@ -246,32 +202,33 @@ object StreamingIngest {
     val sinks: Seq[graft.ingest.EventSink] =
       eventsDir.map(new graft.ingest.EventSink.DatedFileSink(_)).toSeq ++
         eventSink
+    val tf = Timeframes.resolve(timeframe)
     val events = readEvents(spark, srcDir)
     val quarantineQuery = quarantineDir.map { qd =>
       val (_, rejects) = Quarantine.split(events, Quarantine.eventRules())
       // foreachBatch append (not the streaming file sink): the sink is
       // then a plain dated parquet dir with no _spark_metadata log, so
-      // SinkRetention.vacuum can drop aged partitions without
-      // orphaning a manifest.  At-least-once; batch_id enables dedup.
+      // a reader lists its files directly.  At-least-once; batch_id
+      // enables dedup.
       rejects.writeStream
         .option("checkpointLocation", s"$checkpointDir/_quarantine")
         .outputMode("append")
-        .trigger(trigger)
+        .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           graft.ingest.SinkRetention.appendDated(
             batch.withColumn("batch_id", lit(batchId)), s"$qd/events")
         }
         .start()
     }
-    val bars = streamingBars(events, timeframe)
+    val bars = streamingBars(events, tf)
       .observe(LandedBarsMetric, count_if(col("t").isNotNull).as("bars"))
     val barWriter = bars.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.persist()
-        try Canonicalize.canonicalize(batch, timeframe) match {
+        try Canonicalize.canonicalize(batch, tf) match {
           case Some(canonical) =>
             // canonicalize keeps exactly the rows with a non-null bucket
             val counts = batch

@@ -88,7 +88,7 @@ class PlanShapeSpec extends SparkSuite {
   test("bar store date predicates prune partitions at the scan") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("prune").toString + "/bars"
-    graft.ingest.BarStore.upsert(
+    graft.ingest.BarStore.merge(
       graft.ingest.BarPipeline.canonicalBars(spark, sf()), dir)
     val pruned = graft.ingest.BarStore.read(spark, dir)
       .filter(col("bar_date") === "2024-01-05")
@@ -549,8 +549,9 @@ class PlanShapeSpec extends SparkSuite {
     val all = BarPipeline.canonicalBars(spark, sf()).localCheckpoint()
     val bars = all.collect().toSet
     Seq[(String, () => Unit)](
-      // the first write: dedup per key, one exchange
-      "upsert" -> (() => BarStore.upsert(all.union(all), dir)),
+      // the first write (a merge into an absent store): dedup per key,
+      // one exchange
+      "first write" -> (() => BarStore.merge(all.union(all), dir)),
       // a key-level merge of one symbol into every date it touches
       "merge" -> (() => BarStore.merge(all.filter(col("symbol") === "click"),
         dir))).foreach { case (write, run) =>

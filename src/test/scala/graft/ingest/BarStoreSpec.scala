@@ -1,10 +1,10 @@
 package graft.ingest
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import graft.SparkSuite
 import graft.Tables
 
-/** T3 invariant: the keyed upsert is idempotent — running the ingest
+/** T3 invariant: the keyed merge is idempotent — running the ingest
   * twice leaves the store byte-equal in content to running it once, and
   * a re-ingest of a trailing window only rewrites touched partitions. */
 class BarStoreSpec extends SparkSuite {
@@ -16,9 +16,9 @@ class BarStoreSpec extends SparkSuite {
   test("upsert twice ≡ upsert once (idempotent keyed sink, S4/T3)") {
     val dir = Files.createTempDirectory("barstore").toString + "/bars"
     val bars = canonical()
-    BarStore.upsert(bars, dir)
+    BarStore.merge(bars, dir)
     val once = BarStore.read(spark, dir).collect().toSet
-    BarStore.upsert(bars, dir)
+    BarStore.merge(bars, dir)
     val twice = BarStore.read(spark, dir).collect().toSet
     assert(once === twice)
     assert(once.nonEmpty)
@@ -27,11 +27,11 @@ class BarStoreSpec extends SparkSuite {
   test("re-ingest of a trailing window overwrites only touched dates") {
     val dir = Files.createTempDirectory("barstore").toString + "/bars"
     val bars = canonical()
-    BarStore.upsert(bars, dir)
+    BarStore.merge(bars, dir)
     val before = BarStore.read(spark, dir).count()
     // trailing-window refetch: last 10 days only (overlapping, T3/T4)
     val trailing = bars.filter($"timestamp" >= "2024-01-21")
-    BarStore.upsert(trailing, dir)
+    BarStore.merge(trailing, dir)
     val after = BarStore.read(spark, dir)
     // untouched early partitions survive; touched ones are replaced 1:1
     assert(after.count() === before)
@@ -41,138 +41,62 @@ class BarStoreSpec extends SparkSuite {
   test("duplicate keys in one batch collapse (dropDuplicates on key)") {
     val dir = Files.createTempDirectory("barstore").toString + "/bars"
     val bars = canonical()
-    BarStore.upsert(bars.union(bars), dir)
+    BarStore.merge(bars.union(bars), dir)
     assert(BarStore.read(spark, dir).count() === bars.count())
   }
 
-  // --- lifecycle: compaction + retention -------------------------
-
-  /** A store whose every date partition is fragmented into several
-    * files — the layout N streaming appends / task-parallel bootstrap
-    * writes leave behind. */
-  private def fragmentedStore(): (String, Set[org.apache.spark.sql.Row]) = {
-    import org.apache.spark.sql.functions._
+  test("a merge leaves the files of untouched date partitions as they were") {
+    import org.apache.spark.sql.functions.{col, min}
     val dir = Files.createTempDirectory("barstore").toString + "/bars"
-    canonical()
-      .withColumn("bar_date", to_date(col("timestamp")))
-      .repartition(6) // 6 tasks × M dates → up to 6 files per partition
-      .write.partitionBy("bar_date").parquet(dir)
-    (dir, BarStore.read(spark, dir).collect().toSet)
+    val bars = canonical()
+    BarStore.merge(bars, dir)
+    val early = BarStore.read(spark, dir).agg(min($"bar_date")).head.getDate(0)
+    val earlyDir = Paths.get(dir, s"bar_date=$early")
+    def files = Files.list(earlyDir).toArray.map(_.toString).sorted.toSeq
+      .map(f => f -> Files.getLastModifiedTime(Paths.get(f)))
+    val before = files
+    // a trailing-window update with new closes: dynamic overwrite must
+    // rewrite the touched dates only
+    val trailing = bars.filter($"timestamp" >= "2024-01-21")
+    BarStore.merge(trailing.withColumn("close", col("close") + 1.0), dir)
+    assert(files == before)
+    val stored = BarStore.read(spark, dir).drop("bar_date")
+    assert(stored.count() === bars.count())
+    assert(stored.filter($"timestamp" >= "2024-01-21").collect().toSet ==
+      trailing.withColumn("close", col("close") + 1.0).collect().toSet)
   }
 
-  private def visibleFiles(dir: String, part: String): Array[String] = {
-    val d = new java.io.File(dir, part)
-    Option(d.list()).getOrElse(Array.empty)
-      .filter(f => !f.startsWith("_") && !f.startsWith("."))
-  }
-
-  test("compactDates bin-packs settled partitions without changing content") {
-    val (dir, before) = fragmentedStore()
-    val parts = new java.io.File(dir).list()
-      .filter(_.startsWith("bar_date=")).sorted
-    assert(parts.exists(p => visibleFiles(dir, p).length > 1),
-      "fixture must start fragmented")
-    val done = BarStore.compactDates(spark, dir,
-      java.sql.Date.valueOf("2030-01-01"))
-    assert(done.nonEmpty)
-    // every settled partition now holds exactly its target file count (1
-    // at this size), and the rows are untouched
-    parts.foreach { p =>
-      assert(visibleFiles(dir, p).length === 1, s"partition $p")
+  test("a root with no bar_date= directory is an absent store: merge " +
+      "bootstraps it and GET /snapshot answers 0 bars") {
+    import graft.serve.StatusServer
+    import graft.streaming.RunStatusListener
+    val bars = canonical()
+    val expected = bars.collect().toSet
+    // a pre-created empty directory, and one that holds only the hidden
+    // staging directory of a first write that crashed before commit
+    val empty = Files.createTempDirectory("barstore_empty").toString
+    val crashed = Files.createTempDirectory("barstore_crashed").toString
+    val staged = Files.createDirectories(
+      Paths.get(crashed, ".spark-staging-0", "bar_date=2024-01-05"))
+    Files.write(staged.resolve("part-00000.parquet"), "partial".getBytes)
+    def get(port: Int, path: String) = {
+      val resp = java.net.http.HttpClient.newHttpClient().send(
+        java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://127.0.0.1:$port$path")).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      (resp.statusCode(), resp.body())
     }
-    assert(BarStore.read(spark, dir).collect().toSet === before)
-    // idempotent: nothing left to compact
-    assert(BarStore.compactDates(spark, dir,
-      java.sql.Date.valueOf("2030-01-01")).isEmpty)
-    // hidden siblings (tmp/trash) are all cleaned up
-    assert(new java.io.File(dir).list().forall(n => !n.startsWith("_compact")))
-  }
-
-  test("a crash parked mid-swap heals on the next lifecycle run") {
-    val (dir, before) = fragmentedStore()
-    val parts = new java.io.File(dir).list()
-      .filter(_.startsWith("bar_date=")).sorted
-    val victim = parts.head
-    // simulate dying between the two swap renames: partition parked in
-    // a hidden trash dir, live dir absent
-    val root = new java.io.File(dir)
-    val vName = victim.stripPrefix("bar_date=")
-    assert(new java.io.File(root, victim)
-      .renameTo(new java.io.File(root, s"_compact_trash_${vName}_deadbeef")))
-    // degraded-but-consistent: readers see the store minus the parked
-    // partition (hidden prefix ⇒ no doubling, no mixed listing)
-    val vDate = java.sql.Date.valueOf(victim.stripPrefix("bar_date="))
-    val degraded = BarStore.read(spark, dir).collect().toSet
-    assert(degraded === before.filterNot(_.getAs[java.sql.Date]("bar_date") == vDate))
-    // any lifecycle entry point heals the window first
-    BarStore.compactDates(spark, dir, java.sql.Date.valueOf("2030-01-01"))
-    assert(BarStore.read(spark, dir).collect().toSet === before)
-    assert(new java.io.File(dir).list().forall(n => !n.startsWith("_compact")))
-  }
-
-  test("a crash after publish (superseded trash) is swept, not restored") {
-    val (dir, before) = fragmentedStore()
-    val parts = new java.io.File(dir).list()
-      .filter(_.startsWith("bar_date=")).sorted
-    // simulate dying between the publish rename and the trash delete:
-    // live partition EXISTS, a stale copy is parked in trash
-    val victim = parts.head
-    val vName = victim.stripPrefix("bar_date=")
-    val root = new java.io.File(dir)
-    val trash = new java.io.File(root, s"_compact_trash_${vName}_cafebabe")
-    assert(trash.mkdir())
-    java.nio.file.Files.writeString(
-      new java.io.File(trash, "stale.bin").toPath, "superseded copy")
-    // reader is unaffected (trash is hidden), and the next lifecycle
-    // run deletes the superseded copy instead of restoring it
-    assert(BarStore.read(spark, dir).collect().toSet === before)
-    BarStore.compactDates(spark, dir, java.sql.Date.valueOf("2030-01-01"))
-    assert(!trash.exists(), "superseded trash swept")
-    assert(BarStore.read(spark, dir).collect().toSet === before)
-  }
-
-  test("a reader inside the swap window sees old, new, or absent — " +
-      "never mixed or doubled") {
-    // The compaction swap is two renames; the documented contract is:
-    // a concurrent listing observes the full OLD file set, the full
-    // NEW set, or (between the renames) the partition ABSENT — never
-    // a mix of copies and never doubled rows.  The onAfterPark seam
-    // puts this spec exactly inside the transient-missing window.
-    val (dir, before) = fragmentedStore()
-    val byDate = before.groupBy(_.getAs[java.sql.Date]("bar_date"))
-    var windows = 0
-    BarStore.compactDates(spark, dir, java.sql.Date.valueOf("2030-01-01"),
-      128L * 1024 * 1024, () => {
-        windows += 1
-        val seen = BarStore.read(spark, dir).collect().toSet
-        val seenByDate = seen.groupBy(_.getAs[java.sql.Date]("bar_date"))
-        // per partition: either the complete content or nothing at all
-        byDate.foreach { case (d, rows) =>
-          val got = seenByDate.getOrElse(d, Set.empty)
-          assert(got == rows || got.isEmpty,
-            s"partition $d mixed/doubled: ${got.size} of ${rows.size} rows")
-        }
-        // the window is real: exactly one partition is absent right now
-        assert(byDate.keys.count(d => !seenByDate.contains(d)) == 1)
-        // and nothing beyond the declared partitions ever appears
-        assert(seenByDate.keySet.subsetOf(byDate.keySet))
-      })
-    assert(windows > 0, "the seam must have run inside the swap")
-    // after the swap completes, the reader sees the full content again
-    assert(BarStore.read(spark, dir).collect().toSet === before)
-  }
-
-  test("vacuum drops exactly the expired partitions, idempotently") {
-    val (dir, before) = fragmentedStore()
-    val dates = before.map(_.getAs[java.sql.Date]("bar_date")).toSeq.sorted
-    val cutoff = dates(dates.length / 2) // keep the newer half
-    val dropped = BarStore.vacuum(spark, dir, cutoff)
-    assert(dropped.nonEmpty &&
-      dropped.forall(p => java.sql.Date.valueOf(
-        p.stripPrefix("bar_date=")).before(cutoff)))
-    val after = BarStore.read(spark, dir).collect().toSet
-    assert(after === before.filter(
-      r => !r.getAs[java.sql.Date]("bar_date").before(cutoff)))
-    assert(BarStore.vacuum(spark, dir, cutoff).isEmpty, "re-run is a no-op")
+    Seq(empty, crashed).foreach { dir =>
+      val server = new StatusServer(spark, dir, new RunStatusListener)
+      val port = server.start()
+      try {
+        val (code, snap) = get(port, "/snapshot")
+        assert(code == 200 && snap.contains("\"bars_count\":0,"), snap)
+        assert(get(port, "/summaries") == (200, "{\"summaries\":[]}"))
+      } finally server.stop()
+      BarStore.merge(bars, dir)
+      assert(BarStore.read(spark, dir).drop("bar_date").collect().toSet ==
+        expected, dir)
+    }
   }
 }

@@ -2,70 +2,21 @@ package graft.ingest
 
 import graft.SparkSuite
 
-/** Age-gated retention for the append-only side sinks: partition
-  * drops honor the horizon exactly, never touch foreign directories,
-  * and leave the surviving rows byte-identical — the reader-
-  * consistency contract of `SinkRetention`. */
+/** The append-only side sinks land under a capture-date partition, in
+  * parquet (quarantine) and JSON (event summaries) alike. */
 class SinkRetentionSpec extends SparkSuite {
   import spark.implicits._
 
-  private def dated(path: String, date: String, ids: Seq[Long]): Unit =
-    ids.toDF("id").withColumn("sink_date",
-        org.apache.spark.sql.functions.lit(java.sql.Date.valueOf(date)))
-      .write.mode("append").partitionBy("sink_date").parquet(path)
-
-  test("vacuum drops exactly the partitions older than the horizon") {
-    val path = java.nio.file.Files.createTempDirectory("ret").toString
-    dated(path, "2024-01-01", Seq(1L, 2L))
-    dated(path, "2024-02-01", Seq(3L))
-    dated(path, "2024-03-01", Seq(4L, 5L))
-    val dropped = SinkRetention.vacuum(spark, path,
-      java.sql.Date.valueOf("2024-02-01"))
-    assert(dropped == Seq("sink_date=2024-01-01"))
-    // surviving rows are intact and the horizon partition is kept
-    // (strictly-older semantics, matching BarStore.vacuum)
-    val left = spark.read.parquet(path).select($"id").as[Long]
-      .collect().toSet
-    assert(left == Set(3L, 4L, 5L))
-    // idempotent
-    assert(SinkRetention.vacuum(spark, path,
-      java.sql.Date.valueOf("2024-02-01")).isEmpty)
-  }
-
-  test("vacuum ignores foreign directories and absent paths") {
-    val path = java.nio.file.Files.createTempDirectory("ret2").toString
-    dated(path, "2024-01-01", Seq(1L))
-    val foreign = new java.io.File(path, "not_a_partition")
-    assert(foreign.mkdir())
-    val dropped = SinkRetention.vacuum(spark, path,
-      java.sql.Date.valueOf("2030-01-01"))
-    assert(dropped == Seq("sink_date=2024-01-01"))
-    assert(foreign.isDirectory, "foreign dirs must survive the vacuum")
-    assert(SinkRetention.vacuum(spark, path + "/absent",
-      java.sql.Date.valueOf("2030-01-01")).isEmpty)
-  }
-
-  test("appendDated stamps the capture date and vacuum retires it") {
-    val path = java.nio.file.Files.createTempDirectory("ret3").toString
-    SinkRetention.appendDated(Seq(1L, 2L).toDF("id"), path)
-    val today = java.time.LocalDate.now().toString
-    assert(new java.io.File(path, s"sink_date=$today").isDirectory)
-    // today's partition survives a today-horizon (strictly older)...
-    assert(SinkRetention.vacuum(spark, path,
-      java.sql.Date.valueOf(today)).isEmpty)
-    assert(spark.read.parquet(path).count() == 2)
-    // ...and is retired once the horizon passes it
-    val tomorrow = java.time.LocalDate.now().plusDays(1).toString
-    assert(SinkRetention.vacuum(spark, path,
-      java.sql.Date.valueOf(tomorrow)) == Seq(s"sink_date=$today"))
-  }
-
   test("json side sinks get the same dated layout") {
+    val today = java.time.LocalDate.now().toString
+    val parquet = java.nio.file.Files.createTempDirectory("ret3").toString
+    SinkRetention.appendDated(Seq(1L, 2L).toDF("id"), parquet)
+    assert(new java.io.File(parquet, s"sink_date=$today").isDirectory)
+    assert(spark.read.parquet(parquet).count() == 2)
     val path = java.nio.file.Files.createTempDirectory("ret4").toString
     SinkRetention.appendDated(
       Seq(("HistoricalDataUpdated", "{}")).toDF("event_type", "message"),
       path, format = "json")
-    val today = java.time.LocalDate.now().toString
     assert(new java.io.File(path, s"sink_date=$today").isDirectory)
     val read = spark.read.json(path)
     assert(read.count() == 1)

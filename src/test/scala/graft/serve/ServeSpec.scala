@@ -159,6 +159,33 @@ class ServeSpec extends SparkSuite {
     } finally server.stop()
   }
 
+  test("/snapshot calls that overlap store merges all answer 200") {
+    val store = tmp("serve_race") + "/bars"
+    val bars = BarPipeline.canonicalBars(spark, sf()).localCheckpoint()
+    val n = bars.count()
+    BarStore.merge(bars, store)
+    val server = new StatusServer(spark, store, new RunStatusListener)
+    val port = server.start()
+    try {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration._
+      // each merge rewrites every date partition, the worst case for a
+      // reader that lists the store while the overwrite replaces it
+      val writer = Future((1 to 8).foreach(_ => BarStore.merge(bars, store)))
+      val answers = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+      while (!writer.isCompleted)
+        answers += get(s"http://127.0.0.1:$port/snapshot")
+      Await.result(writer, 5.minutes)
+      assert(answers.nonEmpty)
+      val failed = answers.filter(_._1 != 200)
+      assert(failed.length == 0, s"of ${answers.length} answers failed, " +
+        s"the first with ${failed.headOption.map(_._2.take(200))}")
+      // every answer saw the whole store, never a partial listing
+      assert(answers.forall(_._2.contains(s""""bars_count":$n,""")))
+    } finally server.stop()
+  }
+
   test("SSE /events pushes the snapshot on connect, then on each batch") {
     val work = tmp("serve_sse")
     Serve.runOnce(spark, sf(), work)

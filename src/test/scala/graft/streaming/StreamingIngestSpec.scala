@@ -127,24 +127,21 @@ class StreamingIngestSpec extends SparkSuite {
     assert(streamed === batch)
   }
 
-  test("watermarked stream dedup drops exact duplicate bar updates") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import java.sql.Timestamp
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Timestamp, Double)]
-    val bars = input.toDS()
-      .toDF("symbol", "t", "close")
-    val q = StreamingIngest.dedupedBars(bars)
-      .writeStream.format("memory").queryName("dedup_bars")
-      .outputMode("append").start()
-    try {
-      val t1 = Timestamp.valueOf("2024-01-01 00:00:00")
-      input.addData(("A", t1, 1.0), ("A", t1, 1.0), ("B", t1, 2.0))
-      q.processAllAvailable()
-      input.addData(("A", t1, 1.0)) // duplicate across batches
-      q.processAllAvailable()
-      assert(spark.table("dedup_bars").count() == 2) // A and B once each
-    } finally q.stop()
+  test("an unknown timeframe label lands Day bars labelled Day on both paths (F8)") {
+    val store = tmp("store") + "/bars"
+    val (q, _) = StreamingIngest.start(spark, sf(), store, tmp("ckpt"),
+      timeframe = "Tick")
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty)
+    val streamed = BarStore.read(spark, store)
+      .select("bar_key", "symbol", "timestamp", "timeframe",
+        "open", "high", "low", "close", "volume")
+      .collect().toSet
+    val day = BarPipeline.canonicalBars(spark, sf()).collect().toSet
+    assert(BarPipeline.canonicalBars(spark, sf(), "Tick").collect().toSet === day)
+    assert(streamed === day)
+    assert(streamed.nonEmpty &&
+      streamed.forall(_.getAs[String]("timeframe") == "Day"))
   }
 
   test("malformed events land in quarantine without failing the batch (T7)") {
@@ -248,7 +245,7 @@ class StreamingIngestSpec extends SparkSuite {
   test("merge preserves untouched keys in a touched partition") {
     val store = tmp("store") + "/bars"
     val all = BarPipeline.canonicalBars(spark, sf())
-    BarStore.upsert(all, store)
+    BarStore.merge(all, store)
     // an update batch carrying a single symbol must not clobber the
     // other symbols sharing its date partitions
     val oneSymbol = all.filter($"symbol" === "click")
