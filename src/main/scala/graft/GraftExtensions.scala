@@ -12,10 +12,9 @@ import graft.functions._
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (or `.withExtensions(new GraftExtensions)`), no imperative
-  * registration calls needed.  `GraftFunctions.register` remains as
-  * the programmatic path used by the operators themselves (idempotent
-  * either way — injection and registration agree on names/builders).
+  * (or `.withExtensions(new GraftExtensions)`).  `GraftSession.build`
+  * does the latter; it is the one way graft's own programs and specs
+  * get a session, and no operator registers anything itself.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

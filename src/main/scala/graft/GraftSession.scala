@@ -2,14 +2,27 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's tuned defaults.
+/** The one session factory: every graft program (Verify, Bench,
+  * Serve, Explain, the benchmark harness) and every spec gets its
+  * session here, so correctness is checked under the configuration
+  * that is measured and shipped.
   *
-  * Tuned for the driver's local[N] harness but with settings that
-  * transfer to a real cluster: AQE on (runtime re-plan, skew-join
-  * handling, partition coalescing), shuffle partitions sized to the
-  * parallelism instead of the 200 default, UTC session timezone for
-  * oracle parity, and an auto-broadcast threshold generous enough that
-  * the TPC-H-ish dimension tables always broadcast.
+  * Settings, tuned for a local[N] host but meaningful on a cluster:
+  *  - `local[cores]`, with shuffle partitions and default parallelism
+  *    sized to `cores` instead of the 200 default;
+  *  - AQE on, with partition coalescing and skew-join handling;
+  *  - a 64 MB auto-broadcast threshold, so the TPC-H-ish dimension
+  *    tables always broadcast;
+  *  - a 5000-entry generated-class cache (see below);
+  *  - UTC session time zone, for oracle parity;
+  *  - parquet `TIMESTAMP(NANOS)` read as raw Long (see below);
+  *  - snappy parquet, and dynamic partition overwrite (a bar-store
+  *    merge rewrites only the dates it touches);
+  *  - the optimizer rule `InferFiltersFromGenerate` excluded (see
+  *    below);
+  *  - graft's native functions and as-of join strategy, injected by
+  *    `GraftExtensions`;
+  *  - no UI, WARN log level.
   */
 object GraftSession {
   def build(appName: String = "graft",
@@ -18,10 +31,10 @@ object GraftSession {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.default.parallelism", cores.toString)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
@@ -39,6 +52,14 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      // InferFiltersFromGenerate substitutes the whole shingle/token
+      // expression into a pre-Generate filter (size(...)>0, isnotnull),
+      // re-tokenizing every document several times per row.  graft's
+      // generators explode arrays that are essentially never empty, so
+      // the inferred filter is pure overhead — measured 5-10x on the
+      // LSH queries at sf0.1.
+      .config("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

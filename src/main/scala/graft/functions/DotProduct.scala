@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -69,17 +68,12 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registry for graft's native SQL functions. Idempotent; called by
-  * every operator that emits graft_* functions in its Spark SQL.
-  * Skips sessions already carrying the functions — re-registering
-  * emits a "function replaced" WARN per call, which at a query per
-  * operator floods the driver log. */
+/** graft's native SQL functions, which `GraftExtensions` injects into
+  * every session `GraftSession.build` makes. */
 object GraftFunctions {
   import org.apache.spark.sql.catalyst.expressions.Expression
 
-  /** Single source of truth for every native function the library
-    * exposes — consumed by both the imperative `register` path and the
-    * `GraftExtensions` injection path, so the two can never diverge.
+  /** Every native function the library exposes, with its builder.
     * The bloom pair wraps expressions Spark ships for its own runtime
     * row-level filtering but keeps out of the public registry; they
     * power the bloom-prefilter pattern (RelationalExt.qBloomSemiJoin). */
@@ -106,13 +100,4 @@ object GraftFunctions {
       classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain],
       es => org.apache.spark.sql.catalyst.expressions
         .BloomFilterMightContain(es.head, es(1))))
-
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, _, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
 }

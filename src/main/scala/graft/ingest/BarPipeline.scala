@@ -44,24 +44,34 @@ object BarPipeline {
   def filterByProvider(catalog: DataFrame, provider: String): DataFrame =
     catalog.filter(col("provider_doc_id") === provider)
 
-  /** T5: tumbling-window OHLCV bar construction from ticks.
-    * open/close are min_by/max_by on the event timestamp — true
-    * time-ordered first/last, not positional (SURVEY §2.4 A1 note).
-    * Deterministic because (symbol, ts) is unique in the fixtures.
-    * The bucket is the label's `date_trunc` unit (`Timeframes`, the
-    * policy the streaming path shares). */
-  def barsFromTicks(events: DataFrame, timeframe: String = "Day"): DataFrame = {
-    val bucket = date_trunc(Timeframes.unit(timeframe), col("ts"))
+  /** T5: tumbling-window OHLCV bar construction from ticks. */
+  def barsFromTicks(events: DataFrame, timeframe: String = "Day"): DataFrame =
+    ohlcv(bucketedTicks(events, timeframe))
+
+  /** P5: the ticks that carry a symbol, each with its `bucket`: the
+    * label's `date_trunc` unit (`Timeframes`) of its `ts`. */
+  def bucketedTicks(events: DataFrame, timeframe: String): DataFrame =
     events
       .filter(col("event_type").isNotNull) // P5
-      .groupBy(col("event_type").as("symbol"), bucket.as("t"))
+      .withColumn("bucket", date_trunc(Timeframes.unit(timeframe), col("ts")))
+
+  /** The OHLCV aggregate of both bar paths: one (symbol, t, o, h, l, c,
+    * v) row per symbol and `bucket` of `bucketedTicks`.  open/close are
+    * min_by/max_by on the event timestamp — true time-ordered
+    * first/last, not positional (SURVEY §2.4 A1 note).  Deterministic
+    * because (symbol, ts) is unique in the fixtures. */
+  def ohlcv(bucketed: DataFrame): DataFrame =
+    bucketed
+      // grouped on `bucket` itself: a watermark on it keys the
+      // streaming state, and checkpoints record the key as (symbol, bucket)
+      .groupBy(col("event_type").as("symbol"), col("bucket"))
       .agg(
         min_by(col("value"), col("ts")).as("o"),
         max(col("value")).as("h"),
         min(col("value")).as("l"),
         max_by(col("value"), col("ts")).as("c"),
         count(lit(1)).as("v"))
-  }
+      .withColumnRenamed("bucket", "t")
 
   /** Raw bars → canonical schema (never None here: `t` is present),
     * under the resolved timeframe label (F8). */

@@ -59,11 +59,18 @@ object Timeframes {
 
   val valid: Set[String] = bucketMinutesOf.keySet
 
-  /** Reference behavior (F8, `app/config.py:62-71`): default to Day on
-    * an invalid timeframe string rather than failing.  Each bar entry
-    * point resolves its label once; the resolved label is what lands
-    * in `bar_key` and `timeframe`. */
-  def resolve(s: String): String = if (valid.contains(s)) s else "Day"
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Reference behavior (F8, `app/config.py:62-71`): warn and default
+    * to Day on an invalid timeframe string rather than failing.  Each
+    * bar entry point resolves its label once; the resolved label is
+    * what lands in `bar_key` and `timeframe`. */
+  def resolve(s: String): String =
+    if (valid.contains(s)) s
+    else {
+      log.warn(s"unknown timeframe label '$s': landing Day bars")
+      "Day"
+    }
 
   /** `date_trunc` unit of a label's bucket. */
   def unit(label: String): String = resolve(label).toLowerCase

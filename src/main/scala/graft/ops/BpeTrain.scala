@@ -250,7 +250,6 @@ object BpeTrain {
   // ---- engine side --------------------------------------------------
 
   private def docsView(spark: SparkSession, dir: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("documents")
   }
 

@@ -443,14 +443,11 @@ object Dedup {
     simhashCapReportFrom(simhashSig(spark, dir), cap)
 
   /** `simhashCapReport` over an arbitrary (doc_id, text) relation. */
-  def simhashCapReportOf(docs: DataFrame, cap: Int): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
+  def simhashCapReportOf(docs: DataFrame, cap: Int): DataFrame =
     simhashCapReportFrom(
       docs.selectExpr("doc_id",
           s"graft_simhash(${SparkDialect.tokens("text")}) AS simhash")
         .filter("simhash IS NOT NULL"), cap)
-  }
 
   private def simhashCapReportFrom(sig: DataFrame, cap: Int): DataFrame = {
     val spark = sig.sparkSession
@@ -537,7 +534,6 @@ object Dedup {
   def embeddingLsh(spark: SparkSession, dir: String): DataFrame =
     // memoized (r15): its own query + the lshRecall ratio consume it
     RelationCache.materialized(spark, s"emb_lsh_pairs:$dir") {
-      graft.functions.GraftFunctions.register(spark)
       Tables.embeddings(spark, dir).createOrReplaceTempView("embeddings")
       spark.sql(embeddingLshSql(SparkDialect))
     }
@@ -623,7 +619,6 @@ object Dedup {
     * below (same key both build). */
   private[ops] def embNorms(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     RelationCache.cached(spark, s"semantic_norms:$dir") {
       Tables.embeddings(spark, dir)
         .select(col("vec_id"),
@@ -924,20 +919,9 @@ object Dedup {
        |WHERE lab.vec_id IS NULL OR lab.rep = e.vec_id
        |ORDER BY e.vec_id""".stripMargin
 
+  /** The shingle/token generators here rely on the session factory
+    * excluding `InferFiltersFromGenerate` (see `GraftSession.build`). */
   private def runDocs(spark: SparkSession, dir: String, sql: String): DataFrame = {
-    // InferFiltersFromGenerate substitutes the whole shingle/token
-    // expression into a pre-Generate filter (size(...)>0, isnotnull),
-    // re-tokenizing every document several times per row.  Our
-    // generators explode arrays that are essentially never empty, so
-    // the inferred filter is pure overhead — measured 5-10x on the
-    // LSH queries at sf0.1.
-    // Appended to (not clobbering) any exclusions another component
-    // set.  Deliberately NOT restored after building the DataFrame:
-    // optimization happens lazily at action time, so restoring here
-    // would re-enable the rule before the plan is ever optimized.
-    TextOps.excludeRule(spark,
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("documents")
     spark.sql(sql)
   }
@@ -1100,7 +1084,6 @@ object Dedup {
       .withColumn("jaccard", $"shared" / ($"na" + $"nb" - $"shared"))
       .filter($"jaccard" >= 0.5)
       .select($"ia", $"ib")
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("documents")
     val sp = spark.sql(
       s"""SELECT doc_id, ${TextAnalysis.splitCase(SparkDialect)} AS split
@@ -1422,15 +1405,10 @@ object Dedup {
     capReportFrom(grams, minhashSigFrom(grams), cap)
   }
 
-  private def gramsOf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    TextOps.excludeRule(spark,
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    graft.functions.GraftFunctions.register(spark)
+  private def gramsOf(docs: DataFrame): DataFrame =
     docs
       .selectExpr("doc_id", "graft_shingles3(graft_tokens(text)) AS grams")
       .selectExpr("doc_id", "grams", "size(grams) AS ng")
-  }
 
   /** Cluster-canonical keeper set over an arbitrary
     * (doc_id, ingest_ts) relation and its verified near-dup pairs
@@ -1658,7 +1636,6 @@ object Dedup {
   def embeddingCosine(spark: SparkSession, dir: String): DataFrame =
     // memoized (r15): its own query + the lshRecall ratio consume it
     RelationCache.materialized(spark, s"emb_cosine_pairs:$dir") {
-      graft.functions.GraftFunctions.register(spark)
       Tables.embeddings(spark, dir).createOrReplaceTempView("embeddings")
       spark.sql(embeddingCosineSql(SparkDialect))
     }
@@ -1739,7 +1716,6 @@ object Dedup {
     * keep/drop rule). */
   def semantic(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val n = embNorms(spark, dir)
     val c = broadcast(n.filter(col("vec_id") < SemanticClusters)
       .select(col("vec_id").as("cid"), col("v").as("cv"),
@@ -1853,7 +1829,6 @@ object Dedup {
       splitFloor: Long): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val base = Similarity.ivfBase(spark, dir)
     val cents = Similarity.trainScaledCodebookCached(spark, dir, base)
     val nv = base.select($"vec_id", $"v", $"nrm")

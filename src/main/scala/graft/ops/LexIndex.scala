@@ -51,12 +51,9 @@ object LexIndex {
 
   /** Postings + per-batch stats of a (doc_id, text) relation, with
     * the operator's own tokenizer.  One tokenize pass feeds both. */
-  private def tokenized(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
+  private def tokenized(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), expr("graft_tokens(text)").as("toks"))
       .withColumn("ndl", size(col("toks")).cast("long"))
-  }
 
   private def postingsOf(tok: DataFrame): DataFrame =
     tok.select(col("doc_id"), col("ndl"),
@@ -103,7 +100,6 @@ object LexIndex {
     * end-to-end. */
   def serve(spark: SparkSession, indexPath: String,
             terms: Seq[String] = Retrieval.QueryTerms): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val stats = spark.read
       .schema("batch_id STRING, n_docs BIGINT, sum_dl BIGINT")
       .parquet(s"$indexPath/stats")

@@ -425,7 +425,6 @@ object Relational {
 
   def qKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark) // graft_h60
 
     // Declarative distinct-then-rank: the distinct's map-side partial
     // aggregation is already the partition-local reduction (a typed

@@ -583,7 +583,6 @@ object RelationalExt {
     * plain semi-join.  At 100 TB the bloom probe runs at scan speed and
     * the shuffle carries only matching rows. */
   def qBloomSemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // Bloom sizing must be a plan-time literal (BloomFilterAggregate
     // folds NDV/bits during analysis), so derive it from a cheap count
     // of the build side: a pushed-down filtered scan of the SMALL side
@@ -695,7 +694,6 @@ object RelationalExt {
   }
 
   def qArrayStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.embeddings(spark, dir).createOrReplaceTempView("embeddings")
     spark.sql(arrayStatsSql(SparkDialect))
   }

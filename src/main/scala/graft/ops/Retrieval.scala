@@ -647,7 +647,6 @@ object Retrieval {
        |${clfTailCtes(d, "doc", "tfb")}""".stripMargin
 
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("documents")
     RelationCache.cached(spark, s"clf_doc:$dir") {
       spark.sql(clfDocSql(SparkDialect))
@@ -887,7 +886,6 @@ object Retrieval {
   }
 
   private def run(spark: SparkSession, dir: String, sql: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("documents")
     Tables.embeddings(spark, dir).createOrReplaceTempView("embeddings")
     spark.sql(sql)

@@ -126,7 +126,6 @@ object ScalePatterns {
        |ORDER BY key_count DESC, key""".stripMargin
 
   def qSkewReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.load(spark, dir, "orders").createOrReplaceTempView("orders")
     spark.sql(skewReportSql(SparkDialect))
   }

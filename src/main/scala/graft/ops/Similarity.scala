@@ -812,7 +812,6 @@ object Similarity {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val n = ivfBase(spark, dir)
     val cents = trainCodebookCached(spark, dir, n)
     val store = kmeansStorePath(spark, dir, None, "km", cents)
@@ -894,7 +893,6 @@ object Similarity {
     * partitions by cid (k partitions). */
   def clusterKeywords(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val n = ivfBase(spark, dir)
     val cents = trainCodebookCached(spark, dir, n)
     val store = kmeansStorePath(spark, dir, None, "km", cents)
@@ -977,7 +975,6 @@ object Similarity {
   private def clusterSampleOver(spark: SparkSession, dir: String,
       tag: String, cents: Seq[(Long, Array[Double], Double)]): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val store = kmeansStorePath(spark, dir, None, tag, cents)
     spark.read
       .schema("vec_id BIGINT, embedding ARRAY<FLOAT>, cid BIGINT")
@@ -1404,7 +1401,6 @@ object Similarity {
   private[ops] def ivfBase(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     RelationCache.cached(spark, s"ivf_base:$dir") {
       Tables.embeddings(spark, dir)
         .select($"vec_id", $"embedding",
@@ -1820,7 +1816,6 @@ object Similarity {
       storeBase: Option[String], maxBalance: Double): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     def worstOf(lists: DataFrame): (Long, Long, Double) = {
       val r = listHealth(lists)
         .agg(max($"total").as("total"), max($"k").as("k"),
@@ -1938,7 +1933,6 @@ object Similarity {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val n = ivfBase(spark, dir)
     val store = kmeansStorePath(spark, dir, None, tag, cents)
     val probe = probeCids(n.filter($"vec_id" % 100 === 0), cents)
@@ -2352,7 +2346,6 @@ object Similarity {
   }
 
   def sourceCoherence(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.embeddings(spark, dir).createOrReplaceTempView("embeddings")
     Tables.documents(spark, dir).createOrReplaceTempView("documents")
     spark.sql(sourceCoherenceSql(SparkDialect))
@@ -2424,7 +2417,6 @@ object Similarity {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val n = ivfBase(spark, dir)
     val cents = trainScaledCodebookCached(spark, dir, n)
     val cdf = broadcast(cents.toDF("cid", "cv", "cnrm"))
@@ -2585,7 +2577,6 @@ object Similarity {
 
   /** Cached PCA base (vec_id, label, v) — the SQL `e` CTE. */
   private def pcaBase(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     RelationCache.cached(spark, s"pca_base:$dir") {
       Tables.embeddings(spark, dir)
         .select(org.apache.spark.sql.functions.col("vec_id"),
@@ -2816,7 +2807,6 @@ object Similarity {
     run(spark, dir, embeddingStatsSql(SparkDialect))
 
   private def run(spark: SparkSession, dir: String, sql: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.embeddings(spark, dir).createOrReplaceTempView("embeddings")
     spark.sql(sql)
   }
@@ -3103,9 +3093,8 @@ object Similarity {
     * ranked best-first by (cs desc, cid asc). */
   private[ops] def centroidTopDF(rows: DataFrame,
       cents: Seq[(Long, Array[Double], Double)], top: Int): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.select($"vec_id", topCidsCol(spark, cents, top).as("cids"))
+    import org.apache.spark.sql.functions.col
+    rows.select(col("vec_id"), topCidsCol(cents, top).as("cids"))
   }
 
   /** The codebook rides as THREE foldable literals into the native
@@ -3125,11 +3114,9 @@ object Similarity {
   /** The kernel call as a bare Column over (v, nrm) — shared by
     * `centroidTopDF` (projection form) and `assignedCid` (inline
     * withColumn form). */
-  private def topCidsCol(spark: SparkSession,
-      cents: Seq[(Long, Array[Double], Double)],
+  private def topCidsCol(cents: Seq[(Long, Array[Double], Double)],
       top: Int): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val sorted = cents.sortBy(_._1)
     call_function("graft_top_cids", col("v"), col("nrm"),
       typedLit(sorted.map(_._1)),
@@ -3153,7 +3140,7 @@ object Similarity {
       df.withColumn("cid", centroidOrder(cents)(0).getField("cid"))
     else
       df.withColumn("cid",
-        element_at(topCidsCol(df.sparkSession, cents, 1), 1))
+        element_at(topCidsCol(cents, 1), 1))
   }
 
   /** (qid, cid) probe pairs — the `nprobe` nearest centroids per

@@ -48,9 +48,8 @@ object Temporal {
                      leftTs: String, rightTs: String): DataFrame = {
     import org.apache.spark.sql.GraftShim
     import org.apache.spark.sql.catalyst.plans.logical.Project
-    import graft.plans.{AsofJoinNode, GraftPlanner}
+    import graft.plans.AsofJoinNode
     val spark = left.sparkSession
-    GraftPlanner.install(spark)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,

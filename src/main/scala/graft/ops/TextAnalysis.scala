@@ -1220,7 +1220,6 @@ object TextAnalysis {
        |ORDER BY e.doc_id""".stripMargin
 
   private def run(spark: SparkSession, dir: String, sql: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("documents")
     spark.sql(sql)
   }
@@ -1320,7 +1319,6 @@ object TextAnalysis {
     * inline form (its CTEs shadow this view, so registering it is
     * also safe for the SQL-equivalence specs). */
   private def registerSurView(spark: SparkSession, dir: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("documents")
     RelationCache.materialized(spark, s"curation_sur:$dir") {
       spark.sql(surViewSql(SparkDialect))

@@ -385,7 +385,6 @@ object TextFilters {
     * XORs, computed in the same single pass as the assignment. */
   def shardAssignments(spark: SparkSession, dir: String,
                        nShards: Int, withDigest: Boolean): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Seq(col("doc_id"),
       expr(s"CAST(${SparkDialect.arrSize(SparkDialect.tokens("text"))}" +
         " AS BIGINT)").as("n_tokens"))
@@ -638,7 +637,6 @@ object TextFilters {
   // ----------------------------------------------------------------
 
   private def run(spark: SparkSession, dir: String, sql: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("documents")
     spark.sql(sql)
   }
@@ -877,7 +875,6 @@ object TextFilters {
        |${tokenDriftBody(d)}""".stripMargin
 
   def tokenDrift(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.documents(spark, dir).createOrReplaceTempView("documents")
     // materialized (r15): the body references wc twice (global top-B
     // election + per-source binning), and every action otherwise

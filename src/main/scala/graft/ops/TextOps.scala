@@ -233,7 +233,6 @@ object TextOps {
   private[ops] def docTokens(spark: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.GraftFunctions.register(spark)
     RelationCache.cached(spark, s"doc_tokens:$dir") {
       graft.Tables.documents(spark, dir)
         .select(col("doc_id"), expr(SparkDialect.tokens("text")).as("toks"))
@@ -421,16 +420,5 @@ object TextOps {
       .groupBy("doc_id")
       .agg(collect_list(col("gram")).as("hgrams"))
     (cold, hotPerDoc)
-  }
-
-  /** Add an optimizer rule to spark.sql.optimizer.excludedRules,
-    * preserving exclusions already present (idempotent). */
-  def excludeRule(spark: org.apache.spark.sql.SparkSession, rule: String): Unit = {
-    val existing = spark.conf.getOption("spark.sql.optimizer.excludedRules")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-    if (!existing.contains(rule))
-      spark.conf.set("spark.sql.optimizer.excludedRules",
-        (existing :+ rule).mkString(","))
   }
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -9,8 +8,8 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** As-of join as a first-class operator: logical node + planner
-  * strategy + physical streaming-merge exec, injected through
-  * `spark.experimental.extraStrategies`.
+  * strategy + physical streaming-merge exec; `GraftExtensions` injects
+  * the strategy into every session `GraftSession.build` makes.
   *
   * Spark has no native as-of join; the composable fallback
   * (union + partitioned last() window, `ops.Temporal.asofJoin`) works
@@ -144,13 +143,4 @@ case class AsofJoinExec(
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): AsofJoinExec =
     copy(left = newLeft, right = newRight)
-}
-
-/** Installs the strategy on a session (idempotent). */
-object GraftPlanner {
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[AsofJoinStrategy.type]))
-      spark.experimental.extraStrategies = cur :+ AsofJoinStrategy
-  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import graft.ingest.{BarStore, Canonicalize, Quarantine}
+import graft.ingest.{BarPipeline, BarStore, Canonicalize, Quarantine}
 import graft.model.Timeframes
 
 /** The E1 dataflow under Structured Streaming (SURVEY.md §2.7 T1-T6).
@@ -101,19 +101,8 @@ object StreamingIngest {
     * then still accepted, because bucket(ts) ≥ ts − bucketLen. */
   def streamingBars(events: DataFrame, timeframe: String = "Day"): DataFrame = {
     val delayMinutes = 30L * 1440L + Timeframes.bucketMinutes(timeframe)
-    events
-      .filter(col("event_type").isNotNull) // P5
-      .withColumn("bucket", date_trunc(Timeframes.unit(timeframe), col("ts")))
-      .withWatermark("bucket", s"$delayMinutes minutes")
-      .groupBy(col("event_type").as("symbol"), col("bucket"))
-      .agg(
-        min_by(col("value"), col("ts")).as("o"),
-        max(col("value")).as("h"),
-        min(col("value")).as("l"),
-        max_by(col("value"), col("ts")).as("c"),
-        count(lit(1)).as("v"))
-      .select(col("symbol"), col("bucket").as("t"),
-        col("o"), col("h"), col("l"), col("c"), col("v"))
+    BarPipeline.ohlcv(BarPipeline.bucketedTicks(events, timeframe)
+      .withWatermark("bucket", s"$delayMinutes minutes"))
   }
 
   /** Full streaming ingest: source → bars → canonicalize → upsert →
@@ -244,9 +233,8 @@ object StreamingIngest {
             if (keyed > 0) {
               BarStore.merge(canonical, storeDir)
               if (sinks.nonEmpty) {
-                val summaryEvents = graft.ingest.BarPipeline
-                  .summaryEventJson(
-                    graft.ingest.BarPipeline.ingestSummaries(canonical))
+                val summaryEvents = BarPipeline.summaryEventJson(
+                  BarPipeline.ingestSummaries(canonical))
                 sinks.foreach(_.publish(summaryEvents, batchId))
               }
             }

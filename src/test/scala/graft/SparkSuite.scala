@@ -3,19 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite, lazily created. */
+/** Shared local session for specs, from the production factory on 4
+  * cores — one per suite, lazily created. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.build("graft-spec", 4)
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 }

@@ -80,17 +80,15 @@ class TablesEventsSpec extends SparkSuite {
     val micros = java.time.Instant.parse("2024-01-15T12:00:00.123456Z")
     writeNanosEvents(dir,
       micros.getEpochSecond * 1000000000L + micros.getNano)
-    val conf = "spark.sql.legacy.parquet.nanosAsLong"
     val ev = Tables.events(spark, dir)
     assert(ev.schema("ts").dataType === TimestampType)
     assert(ev.select(unix_micros(col("ts"))).head.getLong(0) % 1000000L ===
       123456L)
-    spark.conf.set(conf, "false")
-    try {
+    GraftSession.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong", "false") {
       val e = intercept[IllegalStateException](Tables.events(spark, dir))
       assert(e.getMessage.contains(
         "must set spark.sql.legacy.parquet.nanosAsLong"), e.getMessage)
-    } finally spark.conf.set(conf, "true")
+    }
   }
 
   /** Copy the single part file of a staged write to `dir/events_<n>.parquet`
@@ -107,15 +105,13 @@ class TablesEventsSpec extends SparkSuite {
     // on a session without the nanos conf the stream would otherwise
     // die at micro-batch time with an opaque Spark nanos error — the
     // guard must fire at stream BUILD time with the fix in the message
-    val conf = "spark.sql.legacy.parquet.nanosAsLong"
-    spark.conf.set(conf, "false")
-    try {
+    GraftSession.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong", "false") {
       val e = intercept[IllegalArgumentException] {
         streaming.StreamingIngest.readEvents(spark, sf())
       }
       assert(e.getMessage.contains("nanosAsLong"), e.getMessage)
       assert(e.getMessage.contains("GraftSession"), e.getMessage)
-    } finally spark.conf.set(conf, "true")
+    }
   }
 
   test("streaming readEvents adapts to the probed file format") {

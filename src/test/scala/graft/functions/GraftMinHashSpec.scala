@@ -36,7 +36,6 @@ class GraftMinHashSpec extends SparkSuite {
 
   test("native minhash equals the grouped 32-min SQL formulation") {
     docsView()
-    graft.functions.GraftFunctions.register(spark)
     val native = spark.sql(
       """SELECT doc_id, graft_minhash(graft_shingles3(graft_tokens(text))) AS mh
         |FROM documents""".stripMargin)

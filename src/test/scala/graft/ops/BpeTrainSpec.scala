@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSuite
+import graft.{GraftSession, SparkSuite}
 
 /** The BPE trainer against the textbook example (Sennrich et al.
   * 2016's low/lower/newest/widest corpus, hand-traced merge sequence)
@@ -57,12 +57,11 @@ class BpeTrainSpec extends SparkSuite {
     // more analyzer fixpoint iterations than Spark's default 100; only
     // this spec runs the oracle through Spark — the correctness gate
     // hands it to DuckDB, whose planner walks CTE chains linearly
-    spark.conf.set("spark.sql.analyzer.maxIterations", "500")
-    try {
+    GraftSession.withConf(spark, "spark.sql.analyzer.maxIterations", "500") {
       val sqlForm = spark.sql(BpeTrain.bpeEncodeSql(SparkDialect))
         .collect().toSeq
       assert(eng.nonEmpty && eng == sqlForm)
-    } finally spark.conf.unset("spark.sql.analyzer.maxIterations")
+    }
   }
 
   test("encode invariants: merges only fuse, never split or drop") {

@@ -97,7 +97,6 @@ class ContainmentSpec extends SparkSuite {
 
   test("engine result matches the dialect-shared SQL on the same corpus") {
     docs.createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.register(spark)
     val sql = spark.sql(Dedup.ngramContainmentSql(SparkDialect))
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getDouble(2), r.getDouble(3))).toMap

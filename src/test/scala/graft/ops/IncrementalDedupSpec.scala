@@ -13,9 +13,6 @@ class IncrementalDedupSpec extends SparkSuite {
     Files.createTempDirectory(s"inc_dedup_$tag").toString
 
   private def sqlResult() = {
-    graft.functions.GraftFunctions.register(spark)
-    TextOps.excludeRule(spark,
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     Tables.documents(spark, sf()).createOrReplaceTempView("documents")
     spark.sql(Dedup.incrementalSql(SparkDialect))
   }

@@ -20,7 +20,6 @@ class IndexHealthSpec extends SparkSuite {
   }
 
   test("store-derived report equals the raw-embeddings SQL recomputation") {
-    graft.functions.GraftFunctions.register(spark)
     Tables.embeddings(spark, sf()).createOrReplaceTempView("embeddings")
     val direct = spark.sql(Similarity.indexHealthSql(SparkDialect))
       .collect().map(_.toSeq).toSeq

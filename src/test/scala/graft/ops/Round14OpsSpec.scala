@@ -13,7 +13,6 @@ class Round14OpsSpec extends SparkSuite {
 
   test("token drift: one row per source, psi >= 0, totals reconcile") {
     val rows = TextFilters.tokenDrift(spark, sf("sf0.01")).collect()
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.documents(spark, sf("sf0.01"))
       .createOrReplaceTempView("documents")
     val srcs = spark.sql(
@@ -32,7 +31,6 @@ class Round14OpsSpec extends SparkSuite {
   }
 
   test("token drift: a vocabulary-swapped source trips the flag") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // source A speaks the fixture's stopword-ish English, source B a
     // disjoint vocabulary — B's distribution shares no mass with the
@@ -51,7 +49,6 @@ class Round14OpsSpec extends SparkSuite {
 
   test("token drift: engine == oracle SQL form (run by Spark)") {
     val eng = TextFilters.tokenDrift(spark, sf("sf0.01")).collect()
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.documents(spark, sf("sf0.01"))
       .createOrReplaceTempView("documents")
     val sqlForm =
@@ -75,7 +72,6 @@ class Round14OpsSpec extends SparkSuite {
 
   test("degree hist: engine == oracle SQL form (run by Spark)") {
     val eng = Dedup.degreeHist(spark, sf("sf0.01")).collect()
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.documents(spark, sf("sf0.01"))
       .createOrReplaceTempView("documents")
     val sqlForm =
@@ -113,7 +109,6 @@ class Round14OpsSpec extends SparkSuite {
   }
 
   test("ndcg: engine == oracle SQL form (run by Spark), full + sampled") {
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.embeddings(spark, sf("sf0.001"))
       .createOrReplaceTempView("embeddings")
     val eng = Similarity.retrievalNdcg(spark, sf("sf0.001")).collect()

@@ -10,7 +10,6 @@ class Round15OpsSpec extends SparkSuite {
   // ---------------------------------------------- dedup_lsh_recall_sampled
 
   test("lshRecallSampled: engine ≡ its own SQL form, subset invariant") {
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.embeddings(spark, sf())
       .createOrReplaceTempView("embeddings")
     val viaSql = spark.sql(Dedup.lshRecallSampledSql(SparkDialect)).collect()

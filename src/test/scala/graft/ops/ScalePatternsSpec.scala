@@ -1,32 +1,32 @@
 package graft.ops
 
-import graft.{SparkSuite, Tables}
+import graft.{GraftSession, SparkSuite, Tables}
 import org.apache.spark.sql.functions._
 
 class ScalePatternsSpec extends SparkSuite {
 
   test("bucketed co-located join plans with zero shuffle") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      ScalePatterns.writeBucketed(
-        Tables.orders(spark, sf()).select("o_orderkey", "o_custkey", "o_totalprice"),
-        "b_orders", 8, Seq("o_orderkey"))
-      ScalePatterns.writeBucketed(
-        Tables.lineitem(spark, sf())
-          .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
-        "b_lineitem", 8, Seq("o_orderkey"))
-      val joined = ScalePatterns.coLocatedJoin(spark, "b_orders", "b_lineitem", "o_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
-      // and it is correct
-      val expect = Tables.orders(spark, sf()).select("o_orderkey")
-        .join(Tables.lineitem(spark, sf())
-          .select(col("l_orderkey").as("o_orderkey")), "o_orderkey").count()
-      assert(joined.count() == expect)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
+      try {
+        ScalePatterns.writeBucketed(
+          Tables.orders(spark, sf()).select("o_orderkey", "o_custkey", "o_totalprice"),
+          "b_orders", 8, Seq("o_orderkey"))
+        ScalePatterns.writeBucketed(
+          Tables.lineitem(spark, sf())
+            .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
+          "b_lineitem", 8, Seq("o_orderkey"))
+        val joined = ScalePatterns.coLocatedJoin(spark, "b_orders", "b_lineitem", "o_orderkey")
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
+        // and it is correct
+        val expect = Tables.orders(spark, sf()).select("o_orderkey")
+          .join(Tables.lineitem(spark, sf())
+            .select(col("l_orderkey").as("o_orderkey")), "o_orderkey").count()
+        assert(joined.count() == expect)
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS b_orders")
+        spark.sql("DROP TABLE IF EXISTS b_lineitem")
+      }
     }
   }
 

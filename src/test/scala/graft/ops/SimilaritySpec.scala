@@ -37,7 +37,6 @@ class SimilaritySpec extends SparkSuite {
     // same left-to-right double fold as graft_dot.
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val rows = graft.Tables.embeddings(spark, sf())
       .select($"vec_id", expr(SparkDialect.toDoubleArr("embedding")).as("v"))
       .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))
@@ -193,7 +192,6 @@ class SimilaritySpec extends SparkSuite {
     // narrowing tradeoff (DedupSpec pins the same invariant for the
     // near-dup twin).
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val base = graft.Tables.embeddings(spark, sf()).select("vec_id", "embedding")
     base.union(base.withColumn("vec_id", col("vec_id") + lit(10000L)))
       .createOrReplaceTempView("embeddings")
@@ -299,7 +297,6 @@ class SimilaritySpec extends SparkSuite {
     val stride = math.max(1L, n / k)
     val seeds = (0L until n).count(_ % stride == 0)
     // engine result ≡ the single-statement SQL form (the oracle shape)
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.embeddings(spark, sf()).createOrReplaceTempView("embeddings")
     val sqlForm = spark.sql(Similarity.ivfKmeansScaledSql(SparkDialect))
       .collect().map(_.toSeq).toSeq
@@ -474,7 +471,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("outlier report: engine path serves its SQL form with sane bounds") {
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.embeddings(spark, sf()).createOrReplaceTempView("embeddings")
     graft.Tables.documents(spark, sf()).createOrReplaceTempView("documents")
     val sqlForm = spark.sql(Similarity.outlierReportSql(SparkDialect))
@@ -767,7 +763,6 @@ class SimilaritySpec extends SparkSuite {
     // ~sqrt(n) rows — while a sub-10k corpus keeps the historical
     // mod-100 picks (small-fixture results unchanged).
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val dim = graft.ops.TextOps.EmbeddingDim
     def synth(n: Long) = spark.range(n)
       .select(col("id").as("vec_id"),
@@ -842,7 +837,6 @@ class SimilaritySpec extends SparkSuite {
     // passing int cids or a BIGINT top must get an analysis-time type
     // error, not a ClassCastException in the lazy codebook extraction
     // on the first task.
-    graft.functions.GraftFunctions.register(spark)
     def bad(sql: String): Unit =
       intercept[org.apache.spark.sql.AnalysisException](
         spark.sql(sql).collect())
@@ -872,7 +866,6 @@ class SimilaritySpec extends SparkSuite {
     // arithmetic (long division vs floor of a double divide), kernel
     // ranking, and probing included.
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val dim = graft.ops.TextOps.EmbeddingDim
     val dir = java.nio.file.Files.createTempDirectory("capped_ivf")
     try {

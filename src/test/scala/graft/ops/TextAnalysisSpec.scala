@@ -10,7 +10,6 @@ class TextAnalysisSpec extends SparkSuite {
     val rows = TextAnalysis.chunking(spark, sf()).collect()
     assert(rows.nonEmpty)
     // independent token counts with the operator's own tokenizer
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.documents(spark, sf()).createOrReplaceTempView("documents")
     val nToks = spark.sql(
         "SELECT doc_id, size(graft_tokens(text)) AS n FROM documents")
@@ -264,7 +263,6 @@ class TextAnalysisSpec extends SparkSuite {
       .map(r => r.getLong(0) -> r).toMap
     assert(log.size == 500)
     // stage 1: passed_quality == membership in the inlined score gate
-    graft.functions.GraftFunctions.register(spark)
     val passers = graft.Tables.documents(spark, sf())
       .selectExpr(("doc_id" +: TextAnalysis.scoredSplitExprs(SparkDialect)): _*)
       .filter("quality_score >= 0.5")
@@ -366,7 +364,6 @@ class TextAnalysisSpec extends SparkSuite {
   test("corpus-derived surprisal band keeps a sane rate on a shifted " +
       "distribution") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // a corpus whose surprisal distribution sits nowhere near the
     // benchmark fixture's ~3.4: a tiny Zipf-ish vocabulary puts mean
     // surprisal around ln(vocab) ≈ 2 — a FIXED fixture-fit band would
@@ -458,7 +455,6 @@ class TextAnalysisSpec extends SparkSuite {
     assert(rows("middle")._3 <= rows("tail")._2)
     // the engine's literal-injected band ≡ the single-statement
     // in-query derivation (the oracle form)
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.documents(spark, sf()).createOrReplaceTempView("documents")
     val oracleForm = spark.sql(
       TextAnalysis.surprisalBucketsSql(SparkDialect)).collect()

@@ -6,7 +6,6 @@ import org.apache.spark.sql.Row
 class TextFiltersSpec extends SparkSuite {
 
   private def fixtureDocs() = {
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.documents(spark, sf()).createOrReplaceTempView("documents")
   }
 
@@ -44,7 +43,6 @@ class TextFiltersSpec extends SparkSuite {
   }
 
   test("gopher rules: each fixture-dead rule fires on a nasty corpus") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // one offender per rule that the clean fixture cannot exercise
     val nasty = Seq(
@@ -274,7 +272,6 @@ class TextFiltersSpec extends SparkSuite {
   }
 
   test("bigram LM separates ordered text from scrambled text") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // corpus of repeated ordered phrases + one scrambled doc: every
     // unigram matches the corpus, only the ORDER is wrong — the
@@ -294,7 +291,6 @@ class TextFiltersSpec extends SparkSuite {
 
   test("gopher dashboard: a source literally named 'ALL' stays " +
       "distinguishable from the rollup sentinel") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val text = "the quick brown fox jumps over the lazy dog and runs on"
     Seq((1L, text, "ALL"), (2L, text, "web"), (3L, text, null))

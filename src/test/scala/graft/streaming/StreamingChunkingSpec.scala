@@ -24,7 +24,6 @@ class StreamingChunkingSpec extends SparkSuite {
       java.nio.file.Paths.get(sf() + "/documents.parquet"),
       dir.resolve("documents.parquet"))
     val schema = graft.Tables.documents(spark, sf()).schema
-    graft.functions.GraftFunctions.register(spark)
     spark.readStream.schema(schema).parquet(dir.toString)
       .createOrReplaceTempView("documents")
     val q = spark.sql(
@@ -48,7 +47,6 @@ class StreamingChunkingSpec extends SparkSuite {
   test("the chunking statement is stateless and shuffle-free") {
     graft.Tables.documents(spark, sf())
       .createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.register(spark)
     val plan = spark.sql(
         graft.ops.TextAnalysis.chunkingSqlCore(graft.ops.SparkDialect))
       .queryExecution.executedPlan.toString

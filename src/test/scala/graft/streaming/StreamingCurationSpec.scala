@@ -16,12 +16,10 @@ class StreamingCurationSpec extends SparkSuite {
   import spark.implicits._
 
   /** Quality score + split on doc_id / text, keeping score ≥ 0.5. */
-  private def curate(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  private def curate(docs: DataFrame): DataFrame =
     docs
       .selectExpr(("*" +: TextAnalysis.scoredSplitExprs(SparkDialect)): _*)
       .filter("quality_score >= 0.5")
-  }
 
   /** Per-family PII counts, then redact (rewrite the text) or drop. */
   private def piiGate(docs: DataFrame, redact: Boolean = true): DataFrame = {
@@ -42,7 +40,6 @@ class StreamingCurationSpec extends SparkSuite {
   /** The Gopher rule battery staged as chained projections, so the
     * tokenization lands in one materialized column. */
   private def gopherGate(docs: DataFrame, keepOnly: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val d = SparkDialect
     val rules = TextFilters.gopherRuleExprs(d)
     val verdicts = docs
@@ -133,7 +130,6 @@ class StreamingCurationSpec extends SparkSuite {
   test("gopher gate keeps exactly the batch rule-battery's documents") {
     implicit val sqlCtx = spark.sqlContext
     // batch expectation: the oracle-checked relation's verdicts
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.documents(spark, sf()).createOrReplaceTempView("documents")
     val oracle = spark.sql(TextFilters.gopherRulesSql(SparkDialect))
       .collect().map(r => r.getAs[Long]("doc_id") ->

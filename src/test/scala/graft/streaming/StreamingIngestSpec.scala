@@ -144,6 +144,40 @@ class StreamingIngestSpec extends SparkSuite {
       streamed.forall(_.getAs[String]("timeframe") == "Day"))
   }
 
+  /** The WARN lines `Timeframes` logs while `body` runs. */
+  private def timeframeWarnings(body: => Unit): List[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    var seen = List.empty[String]
+    val appender = new AbstractAppender("timeframe-warnings", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = synchronized {
+        if (e.getLevel == Level.WARN) seen :+= e.getMessage.getFormattedMessage
+      }
+    }
+    appender.start()
+    val logger = LogManager.getLogger(graft.model.Timeframes.getClass)
+      .asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try body finally logger.removeAppender(appender)
+    seen
+  }
+
+  test("an unknown timeframe label logs one WARN per bar entry point, a valid one none (F8)") {
+    def warnings(label: String) = Seq(
+      timeframeWarnings(BarPipeline.canonicalBars(spark, sf(), label)),
+      timeframeWarnings {
+        val (q, _) = StreamingIngest.start(spark, sf(), tmp("wstore") + "/bars",
+          tmp("wckpt"), timeframe = label)
+        q.awaitTermination(120000)
+      })
+    val tick = List("unknown timeframe label 'Tick': landing Day bars")
+    assert(warnings("Tick") == Seq(tick, tick))
+    assert(warnings("Day") == Seq(Nil, Nil))
+  }
+
   test("malformed events land in quarantine without failing the batch (T7)") {
     val src = tmp("qsrc")
     val store = tmp("qstore") + "/bars"

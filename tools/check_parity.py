@@ -7,12 +7,18 @@ schema (column names), and value hash over rows sorted by all columns
 with columns sorted by name. Floats are compared with rounding to 9
 significant-ish decimals to mirror grid-point parity.
 
-Usage: check_parity.py <sfDir> <outDir>
+With a third argument, also writes {query: sha256} as JSON to that
+path: the hash of each query's canonical Spark rows (sorted column
+names, then the rows as compared above), so two Verify outputs, say of
+two commits, compare with one `diff` of their hash files.
+
+Usage: check_parity.py <sfDir> <outDir> [hashesJson]
 """
-import sys, os, json, math
+import sys, os, json, math, hashlib
 import duckdb
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
+hashes_path = sys.argv[3] if len(sys.argv) > 3 else None
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 con = duckdb.connect()
@@ -40,6 +46,7 @@ def canon(rows, cols):
     return sorted(out)
 
 fails = 0
+hashes = {}
 for name in sorted(oracle):
     sql = oracle[name]
     qdir = f"{out_dir}/{name}"
@@ -48,6 +55,9 @@ for name in sorted(oracle):
     try:
         mine = con.execute(f"SELECT * FROM '{qdir}/*.parquet'")
         mrows, mcols = mine.fetchall(), [d[0] for d in mine.description]
+        a = canon(mrows, mcols)
+        hashes[name] = hashlib.sha256(
+            "\n".join(["|".join(sorted(mcols))] + a).encode()).hexdigest()
         orc = con.execute(sql).arrow()
         orows = [tuple(c[i].as_py() for c in orc.columns) for i in range(orc.num_rows)]
         ocols = orc.schema.names
@@ -64,10 +74,14 @@ for name in sorted(oracle):
         print(f"FAIL {name}: cols {sorted(mcols)} vs {sorted(ocols)}"); fails += 1; continue
     if len(mrows) != len(orows):
         print(f"FAIL {name}: rows {len(mrows)} vs {len(orows)}"); fails += 1; continue
-    a, b = canon(mrows, mcols), canon(orows, ocols)
+    b = canon(orows, ocols)
     if a != b:
         bad = [(x, y) for x, y in zip(a, b) if x != y][:3]
         print(f"FAIL {name}: value mismatch, e.g. {bad}"); fails += 1; continue
     print(f"OK   {name} ({len(mrows)} rows)")
+if hashes_path:
+    with open(hashes_path, "w") as f:
+        json.dump(hashes, f, indent=1, sort_keys=True)
+        f.write("\n")
 print(f"\n{len(oracle) - fails}/{len(oracle)} queries match")
 sys.exit(1 if fails else 0)
