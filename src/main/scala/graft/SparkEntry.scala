@@ -481,9 +481,9 @@ object SparkEntry {
     Query("text_pack_sequences", TextAnalysis.packSequences,
       TextAnalysis.packSequencesSql(DuckDialect)),
     Query("text_chunking", TextAnalysis.chunking,
-      TextAnalysis.chunkingSql(DuckDialect), needs = Seq(Bm25Store)),
+      TextAnalysis.chunkingSql(DuckDialect)),
     Query("text_chunk_dedup", TextAnalysis.chunkDedup,
-      TextAnalysis.chunkDedupSql(DuckDialect), needs = Seq(Bm25Store)),
+      TextAnalysis.chunkDedupSql(DuckDialect)),
     Query("text_contamination", TextAnalysis.contamination,
       TextAnalysis.contaminationSql(DuckDialect)),
     Query("text_contamination_risk", TextAnalysis.contaminationRisk,

@@ -1221,20 +1221,21 @@ object Dedup {
     * build entry.  (`minhashCapReport` uses a different cap and keeps
     * its own pair stage.) */
   private def minhashPairsCached(spark: SparkSession,
-      dir: String): DataFrame = {
-    // Native per-row signature (graft_minhash): one md5 per gram + 32
-    // min-updates in a narrow projection, replacing the explode →
-    // hash-shuffle → 32-min aggregate subplan.  The grouped SQL form
-    // stays as the oracle's independent formulation; empty gram sets
-    // yield NULL and are filtered to match its emits-no-row relation.
-    val grams = gramsDF(spark, dir)
-    val sig = RelationCache.materialized(spark, s"mh_sig:$dir") {
-      minhashSigFrom(grams)
-    }
+      dir: String): DataFrame =
     RelationCache.materialized(spark, s"mh_pairs:$dir") {
-      minhashPairsFrom(grams, sig)
+      minhashPairsFrom(gramsDF(spark, dir), minhashSig(spark, dir))
     }
-  }
+
+  /** The session-shared full-corpus signature relation.  Native per-row
+    * signature (graft_minhash): one md5 per gram + 32 min-updates in a
+    * narrow projection, replacing the explode → hash-shuffle → 32-min
+    * aggregate subplan.  The grouped SQL form stays as the oracle's
+    * independent formulation; empty gram sets yield NULL and are
+    * filtered to match its emits-no-row relation. */
+  private def minhashSig(spark: SparkSession, dir: String): DataFrame =
+    RelationCache.materialized(spark, s"mh_sig:$dir") {
+      minhashSigFrom(gramsDF(spark, dir))
+    }
 
   /** Wide signature relation (doc_id, h0..h31) from a gram relation —
     * the engine-side native form shared by the dir-cached path above
@@ -1310,13 +1311,8 @@ object Dedup {
     minhashCapReport(spark, dir, DemoBandBucketCap)
 
   def minhashCapReport(spark: SparkSession, dir: String,
-      cap: Int): DataFrame = {
-    val grams = gramsDF(spark, dir)
-    val sig = RelationCache.materialized(spark, s"mh_sig:$dir") {
-      minhashSigFrom(grams)
-    }
-    capReportFrom(grams, sig, cap)
-  }
+      cap: Int): DataFrame =
+    capReportFrom(gramsDF(spark, dir), minhashSig(spark, dir), cap)
 
   private def capReportFrom(grams: DataFrame, sig: DataFrame,
       cap: Int): DataFrame = {

@@ -1166,11 +1166,7 @@ object Similarity {
       truthDf: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val truth = truthDf.getOrElse(
-      RelationCache.materialized(spark, s"recall_truth:$dir") {
-        topK(spark, dir).filter($"rank" <= 5)
-          .select($"query_id", $"neighbor_id")
-      })
+    val truth = truthDf.getOrElse(exactTruth(spark, dir))
     val tc = truth.groupBy($"query_id").agg(count(lit(1)).as("n_true"))
     val wCase = NdcgW.zipWithIndex.foldLeft(lit(0L)) {
       case (acc, (w, i)) => when($"rank" === (i + 1), w).otherwise(acc)
@@ -1699,12 +1695,7 @@ object Similarity {
     // also warm the fixed-family session assignment relation — under
     // RUNS=1 its n×k kernel pass otherwise lands on the first
     // alphabetical consumer (sim_ann_ivf) instead of this labeled line
-    val n = ivfBase(spark, dir)
-    val cents = fixedCentsCached(spark, dir, n)
-    RelationCache.materialized(spark, s"fixed_asgn:$dir") {
-      import spark.implicits._
-      assignedCid(n, cents).select($"vec_id", $"cid")
-    }.count()
+    fixedAsgn(spark, dir).count()
     // warm the family's memoized serve relations (same discipline as
     // prebuildKmeansStores)
     ivf(spark, dir).count()
@@ -2847,7 +2838,7 @@ object Similarity {
       // CROSS JOIN Spark would execute literally) stays as the oracle
       val n = ivfBase(spark, dir)
       exactIvfServe(spark, n, fixedCentsCached(spark, dir, n),
-        Some(s"fixed_asgn:$dir"))
+        fixedAsgn(spark, dir))
     }
   /** Engine ADC forms: the COARSE stage (assignment + probing → cand)
     * runs through the collected capped codebook and the kernel — no
@@ -2861,13 +2852,13 @@ object Similarity {
   def ivfAdc(spark: SparkSession, dir: String): DataFrame =
     RelationCache.materialized(spark, s"serve_adc:$dir") {
       adcServeLiteral(spark, dir, pqSeedCb(spark, dir),
-        s"pq_codes_sampled:$dir")
+        pqCodesSampled(spark, dir))
     }
 
   def ivfAdcTrained(spark: SparkSession, dir: String): DataFrame =
     RelationCache.materialized(spark, s"serve_adc_trained:$dir") {
       adcServeLiteral(spark, dir, pqTrainedCb(spark, dir),
-        s"pq_codes_trained:$dir")
+        pqCodesTrained(spark, dir))
     }
 
   /** (s, j, cw): PqM·PqK per-subspace codewords. */
@@ -2980,23 +2971,19 @@ object Similarity {
       cb
     }
 
-  /** ADC serve over a literal codebook: codes are assigned once
-    * (session-cached), the codebook and the kernel coarse candidates
-    * are temp views, and the scoring tail is the SAME `pqAdcTail` SQL
-    * the oracle runs — so the serve pays one narrow pass over codes
-    * plus the candidate joins, never the training chain. */
+  /** ADC serve over a literal codebook `cb` and its session-cached
+    * `codes`: the codebook and the kernel coarse candidates are temp
+    * views, and the scoring tail is the SAME `pqAdcTail` SQL the oracle
+    * runs — so the serve pays one narrow pass over codes plus the
+    * candidate joins, never the training chain. */
   private def adcServeLiteral(spark: SparkSession, dir: String,
-      cb: PqCb, codesKey: String): DataFrame = {
+      cb: PqCb, codes: DataFrame): DataFrame = {
     requirePqGeometry()
-    import org.apache.spark.sql.functions._
     val n = ivfBase(spark, dir)
     val cents = fixedCentsCached(spark, dir, n)
-    ivfCand(spark, n, cents, Some(s"fixed_asgn:$dir"))
+    ivfCand(spark, n, cents, fixedAsgn(spark, dir))
       .createOrReplaceTempView("graft_adc_cand")
-    val sub = pqSubDF(spark, dir)
-    RelationCache.cached(spark, codesKey) {
-      pqAssignDF(sub, cb).select(col("vec_id"), col("s"), col("code"))
-    }.createOrReplaceTempView("graft_pq_codes")
+    codes.createOrReplaceTempView("graft_pq_codes")
     import spark.implicits._
     cb.map { case (s, j, cw) => (s, j, cw.toSeq) }.toDF("s", "j", "cw")
       .createOrReplaceTempView("graft_pq_cb")
@@ -3014,32 +3001,38 @@ object Similarity {
         .stripMargin)
   }
 
+  /** Session-cached PQ code relations (vec_id, s, code) under the
+    * sampled-seed and the Lloyd-trained codebook. */
+  private def pqCodesSampled(spark: SparkSession, dir: String): DataFrame =
+    RelationCache.cached(spark, s"pq_codes_sampled:$dir") {
+      pqCodesOf(spark, dir, pqSeedCb(spark, dir))
+    }
+  private def pqCodesTrained(spark: SparkSession, dir: String): DataFrame =
+    RelationCache.cached(spark, s"pq_codes_trained:$dir") {
+      pqCodesOf(spark, dir, pqTrainedCb(spark, dir))
+    }
+  private def pqCodesOf(spark: SparkSession, dir: String,
+      cb: PqCb): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    pqAssignDF(pqSubDF(spark, dir), cb).select(col("vec_id"), col("s"), col("code"))
+  }
+
   /** Bench-priced builds of the PQ codebooks + code relations — SPLIT
     * into the sampled-seed and Lloyd-trained halves (labeled
     * `pq_codes_sampled` / `pq_codes_trained` build lines) so a
     * filtered run serving only `sim_ann_ivf_adc` never pays the full
     * PqIters driver-coordinated training chain it cannot read, and
-    * vice versa. */
+    * vice versa.  Each also warms its memoized ADC serve (its own query
+    * + both recall harnesses consume it — serving-pipeline memo note
+    * above `topK`). */
   def prebuildPqCodesSampled(spark: SparkSession, dir: String): Unit = {
-    RelationCache.cached(spark, s"pq_codes_sampled:$dir") {
-      pqAssignDF(pqSubDF(spark, dir), pqSeedCb(spark, dir))
-        .select(org.apache.spark.sql.functions.col("vec_id"),
-          org.apache.spark.sql.functions.col("s"),
-          org.apache.spark.sql.functions.col("code"))
-    }.count()
-    // warm the memoized ADC serve (its own query + both recall
-    // harnesses consume it — serving-pipeline memo note above `topK`)
+    pqCodesSampled(spark, dir).count()
     ivfAdc(spark, dir).count()
     ()
   }
 
   def prebuildPqCodesTrained(spark: SparkSession, dir: String): Unit = {
-    RelationCache.cached(spark, s"pq_codes_trained:$dir") {
-      pqAssignDF(pqSubDF(spark, dir), pqTrainedCb(spark, dir))
-        .select(org.apache.spark.sql.functions.col("vec_id"),
-          org.apache.spark.sql.functions.col("s"),
-          org.apache.spark.sql.functions.col("code"))
-    }.count()
+    pqCodesTrained(spark, dir).count()
     ivfAdcTrained(spark, dir).count()
     ()
   }
@@ -3268,29 +3261,34 @@ object Similarity {
       // cache entry instead of pinning a new one per call
       val n = ivfBase(spark, dir)
       exactIvfServe(spark, n, trainCodebookCached(spark, dir, n),
-        Some(s"kmeans_asgn:$dir"))
+        kmeansAsgn(spark, dir))
     }
 
-  /** IVF candidate pairs (qid, nid) over any collected codebook:
-    * kernel/unrolled assignment + nprobe=2 probing — the coarse stage
-    * shared by the exact serve and the ADC engine forms (where it
-    * replaces the oracle's n·k CROSS JOIN + per-vector window). */
+  /** The full-corpus coarse assignment (vec_id, cid) of each codebook
+    * family — the n×k kernel pass, the dominant serve cost (≈25 s at the
+    * 100× fixture) shared by every query of the family, so it is paid
+    * once per session.  `materialized`: the assignment plan carries the
+    * k·D literal centroid doubles. */
+  private def fixedAsgn(spark: SparkSession, dir: String): DataFrame =
+    RelationCache.materialized(spark, s"fixed_asgn:$dir") {
+      val n = ivfBase(spark, dir)
+      assignedCid(n, fixedCentsCached(spark, dir, n)).select("vec_id", "cid")
+    }
+  private def kmeansAsgn(spark: SparkSession, dir: String): DataFrame =
+    RelationCache.materialized(spark, s"kmeans_asgn:$dir") {
+      val n = ivfBase(spark, dir)
+      assignedCid(n, trainCodebookCached(spark, dir, n)).select("vec_id", "cid")
+    }
+
+  /** IVF candidate pairs (qid, nid) over any collected codebook and
+    * its corpus assignment `asgn` (vec_id, cid): nprobe=2 probing — the
+    * coarse stage shared by the exact serve and the ADC engine forms
+    * (where it replaces the oracle's n·k CROSS JOIN + per-vector
+    * window). */
   private def ivfCand(spark: SparkSession, n: DataFrame,
       cents: Seq[(Long, Array[Double], Double)],
-      asgnKey: Option[String] = None): DataFrame = {
+      asgn: DataFrame): DataFrame = {
     import spark.implicits._
-    // The full-corpus coarse assignment is the n×k kernel pass — the
-    // dominant serve cost (≈25 s at the 100× fixture) shared by every
-    // query of a codebook family; callers that know their (dir,
-    // family) pass a key so it is paid once per session (the trained
-    // family's key matches nprobeSweep's existing `kmeans_asgn`
-    // relation — same plan, same cache entry).
-    val asgn = asgnKey match {
-      case Some(k) => RelationCache.cached(spark, k) {
-        assignedCid(n, cents).select($"vec_id", $"cid")
-      }
-      case None => assignedCid(n, cents).select($"vec_id", $"cid")
-    }
     val probe = probeCids(n.filter($"vec_id" % 100 === 0), cents)
     probe.join(asgn, "cid")
       .filter($"vec_id" =!= $"qid")
@@ -3323,9 +3321,7 @@ object Similarity {
     val sq = RelationCache.materialized(spark, s"nprobe_sweep_queries:$dir") {
       n.join(truth.select($"query_id".as("vec_id")).distinct(), "vec_id")
     }
-    val asgn = RelationCache.materialized(spark, s"kmeans_asgn:$dir") {
-      assignedCid(n, cents).select($"vec_id", $"cid")
-    }
+    val asgn = kmeansAsgn(spark, dir)
     // One candidate generation + ONE scoring pass at the WIDEST probe
     // (every narrower setting's candidates are a crn-prefix subset —
     // a neighbor's cid has exactly one rank per query, so `crn <= np`
@@ -3460,7 +3456,7 @@ object Similarity {
     val cents = trainCodebookCached(spark, dir, n)
     val byRel = Window.partitionBy($"qid").orderBy($"rel".desc, $"nid")
     val pool = RelationCache.materialized(spark, s"mmr_pool:$dir") {
-      ivfCand(spark, n, cents, Some(s"kmeans_asgn:$dir"))
+      ivfCand(spark, n, cents, kmeansAsgn(spark, dir))
         .join(n.select($"vec_id".as("qid"), $"v".as("qv"), $"nrm".as("qn")), "qid")
         .join(n.select($"vec_id".as("nid"), $"v".as("nv"), $"nrm".as("nn")), "nid")
         .select($"qid", $"nid",
@@ -3595,10 +3591,10 @@ object Similarity {
     * (qid, nid) pairs; scoring re-attaches vectors by key. */
   private def exactIvfServe(spark: SparkSession, n: DataFrame,
       cents: Seq[(Long, Array[Double], Double)],
-      asgnKey: Option[String] = None): DataFrame = {
+      asgn: DataFrame): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val cand = ivfCand(spark, n, cents, asgnKey)
+    val cand = ivfCand(spark, n, cents, asgn)
     val sc = cand
       .join(n.select($"vec_id".as("qid"), $"v".as("qv"), $"nrm".as("qn")), "qid")
       .join(n.select($"vec_id".as("nid"), $"v".as("nv"), $"nrm".as("nn")), "nid")
@@ -3810,7 +3806,7 @@ object Similarity {
   private[ops] def knnGraphFinal(spark: SparkSession,
       dir: String): DataFrame = {
     val d = SparkDialect
-    // Every stage is localCheckpoint'ed (eager, session-local): the
+    // Every stage is `materialized` (localCheckpoint'ed, eager): the
     // init plan carries the 64 hyperplanes as ~65k literal doubles,
     // and WITHOUT lineage truncation each later stage EMBEDS it, so
     // every action on the final graph re-analyzes a multi-thousand-
@@ -3818,7 +3814,7 @@ object Similarity {
     // dwarfing the actual ≤60k-row execution.  Checkpointing cuts
     // each stage's lineage to a LogicalRDD; the graph rows are tiny
     // (n·K edges), so the storage cost is nil.
-    var g = RelationCache.cached(spark, s"knn_g0:$dir") {
+    var g = RelationCache.materialized(spark, s"knn_g0:$dir") {
       // the skew-bounded rank-window init (see knnInitCte) — NOT the
       // bucket clique, which is quadratic in hot-bucket size.  Band
       // keys come from the SHARED session relation Dedup.embBandKeys
@@ -3840,11 +3836,11 @@ object Similarity {
       val init = fwd.select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
         .unionAll(fwd.select(col("b.vec_id").as("qid"), col("a.vec_id").as("nid")))
         .distinct()
-      knnScore(spark, dir, init).localCheckpoint()
+      knnScore(spark, dir, init)
     }
     for (i <- 1 to KnnRounds) {
       val prev = g
-      g = RelationCache.cached(spark, s"knn_g$i:$dir") {
+      g = RelationCache.materialized(spark, s"knn_g$i:$dir") {
         import org.apache.spark.sql.functions.col
         val edges = prev.select(col("qid"), col("nid"))
         val sym = edges
@@ -3855,7 +3851,6 @@ object Similarity {
             col("x.nid") === col("y.qid") && col("x.qid") =!= col("y.nid"))
           .select(col("x.qid").as("qid"), col("y.nid").as("nid"))
         knnScore(spark, dir, edges.unionByName(non).distinct())
-          .localCheckpoint()
       }
     }
     g

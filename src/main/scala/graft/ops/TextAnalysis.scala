@@ -1416,14 +1416,8 @@ object TextAnalysis {
     * is not live for this corpus/cap; a non-empty one tells the user
     * which eval docs need a raised `maxDf` or boilerplate stripping
     * before trusting `text_contamination`. */
-  def contaminationRisk(spark: SparkSession, dir: String): DataFrame = {
-    val e = RelationCache.materialized(spark, s"contamination_grams:$dir") {
-      run(spark, dir,
-        s"""WITH ${contaminationGramCtes(SparkDialect)}
-           |SELECT doc_id, split, gram FROM e""".stripMargin)
-    }
-    contaminationRiskCapped(e, TextOps.MaxGramDf)
-  }
+  def contaminationRisk(spark: SparkSession, dir: String): DataFrame =
+    contaminationRiskCapped(contaminationGrams(spark, dir), TextOps.MaxGramDf)
 
   /** The risk projection over an exploded posting relation — split out
     * so specs can drive it with a synthetic boilerplate corpus and a
@@ -1460,14 +1454,17 @@ object TextAnalysis {
     * shingle chain per reference, so the engine computes it once as a
     * cached DataFrame and self-joins aliases — the same multi-consumer
     * pattern as Dedup's gram/signature relations. */
-  def contamination(spark: SparkSession, dir: String): DataFrame = {
-    val e = RelationCache.materialized(spark, s"contamination_grams:$dir") {
+  def contamination(spark: SparkSession, dir: String): DataFrame =
+    contaminationCapped(contaminationGrams(spark, dir), TextOps.MaxGramDf)
+
+  /** The session-shared exploded posting relation e(doc_id, split,
+    * gram) both contamination checks read. */
+  private def contaminationGrams(spark: SparkSession, dir: String): DataFrame =
+    RelationCache.materialized(spark, s"contamination_grams:$dir") {
       run(spark, dir,
         s"""WITH ${contaminationGramCtes(SparkDialect)}
            |SELECT doc_id, split, gram FROM e""".stripMargin)
     }
-    contaminationCapped(e, TextOps.MaxGramDf)
-  }
 
   /** The capped pair stage over an exploded posting relation
     * e(doc_id, split, gram) — split out so specs can run it on

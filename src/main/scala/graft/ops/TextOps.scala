@@ -339,27 +339,8 @@ object TextOps {
     * slower join instead of a driver OOM). */
   val BroadcastMaxHotGrams: Long = 1000000L
 
-  /** Session-scoped memo for the sized hot-gram side, keyed by the
-    * posting relation's canonicalized plan + cap: the guard count that
-    * sizes the broadcast decision runs ONCE per distinct
-    * (relation, cap) per session, not once per operator invocation —
-    * four operators (ngram Jaccard, contamination, contamination risk,
-    * dup spans) share the same posting relation, so each invocation
-    * after the first saves the count job.  Entries carry the same
-    * session-lifetime caveat as `RelationCache` (a relation regenerated
-    * in place under an identical plan needs `clearHotMemo`). */
-  private val hotMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int),
-    org.apache.spark.sql.DataFrame]()
   /** Test hook: number of guard-count jobs actually run. */
   private[ops] val hotGuardCounts = new java.util.concurrent.atomic.AtomicLong
-
-  private[ops] def clearHotMemo(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    hotMemo.keySet.asScala.filter(_._1 eq spark).toSeq.foreach { k =>
-      Option(hotMemo.remove(k)).foreach(_.unpersist())
-    }
-  }
 
   /** Split an exploded posting relation `e(doc_id, ..., gram)` into the
     * capped candidate-generation inputs: (cold postings — `e` minus the
@@ -372,8 +353,8 @@ object TextOps {
     *    every posting of a hot gram into a single window task (the
     *    linear-skew variant of the same bomb the cap exists to defuse);
     *  - the hot-gram set is counted first (one agg job over the — in
-    *    practice cached — posting relation, memoized per session by
-    *    `hotMemo` so repeat invocations skip the job entirely) and
+    *    practice cached — posting relation, memoized per session in
+    *    `RelationCache` so repeat invocations skip the job entirely) and
     *    broadcast into both consumers only while it stays under
     *    `BroadcastMaxHotGrams`, so no stage shuffles postings keyed on
     *    a skewed gram and an over-eager `maxDf` cannot OOM the driver.
@@ -388,33 +369,29 @@ object TextOps {
   def capPostings(posts: org.apache.spark.sql.DataFrame, maxDf: Int)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.functions._
-    RelationCache.hookShutdown(posts.sparkSession)
-    val key = (posts.sparkSession,
-      posts.queryExecution.analyzed.canonicalized.toString, maxDf)
-    var hotSide = hotMemo.get(key)
-    if (hotSide == null) {
-      // The hot set is persisted around the size-guard count so the
-      // groupBy-count aggregation runs exactly once even when `posts`
-      // is an uncached relation (the count is eager; without the
-      // persist the `hot` subplan would be re-evaluated inside both
-      // joins below — three full scans of an uncached `posts`).  The
-      // pinned set is tiny (grams with df > maxDf — the boilerplate
-      // vocabulary, not the corpus), so the memo footprint is bounded
-      // by distinct (relation, cap) pairs — the same O(1)-per-session
-      // shape as RelationCache.
-      val hot = posts.groupBy("gram").agg(count(lit(1)).as("df"))
+    // Memoized per session, keyed by the posting relation's
+    // canonicalized plan + cap: four operators (ngram Jaccard,
+    // contamination, contamination risk, dup spans) share the same
+    // posting relation, so each invocation after the first skips the
+    // guard count.  The hot set is cached around the count so the
+    // groupBy-count aggregation runs exactly once even when `posts` is
+    // an uncached relation (without it the `hot` subplan would be
+    // re-evaluated inside both joins below — three full scans).  The
+    // pinned set is tiny (grams with df > maxDf — the boilerplate
+    // vocabulary, not the corpus), so the footprint is bounded by
+    // distinct (relation, cap) pairs.
+    val spark = posts.sparkSession
+    val key = s"hot_grams:$maxDf:${posts.queryExecution.analyzed.canonicalized}"
+    val hot = RelationCache.cached(spark, key) {
+      posts.groupBy("gram").agg(count(lit(1)).as("df"))
         .filter(col("df") > maxDf)
         .select("gram")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      hotGuardCounts.incrementAndGet()
-      val sized =
-        if (hot.count() <= BroadcastMaxHotGrams) broadcast(hot) else hot
-      val prev = hotMemo.putIfAbsent(key, sized)
-      // a lost race leaves a duplicate persist; keep the winner's (the
-      // CacheManager dedupes storage by plan — don't unpersist, that
-      // would evict the shared entry)
-      hotSide = if (prev != null) prev else sized
     }
+    val nHot = RelationCache.cachedScalar(spark, s"$key:count") {
+      hotGuardCounts.incrementAndGet()
+      java.lang.Long.valueOf(hot.count())
+    }
+    val hotSide = if (nHot <= BroadcastMaxHotGrams) broadcast(hot) else hot
     val cold = posts.join(hotSide, Seq("gram"), "left_anti")
     val hotPerDoc = posts.join(hotSide, Seq("gram"))
       .groupBy("doc_id")

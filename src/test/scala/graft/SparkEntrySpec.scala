@@ -25,15 +25,15 @@ class SparkEntrySpec extends AnyFunSuite {
       b -> queries.keys.count(pred) }
     assert(counts == Map(
       "kmeans_codebooks_and_stores" -> 44, "minhash_sig_store" -> 22,
-      "bm25_store" -> 12, "fixed_ivf_stores" -> 7,
+      "bm25_store" -> 10, "fixed_ivf_stores" -> 7,
       "exact_truth_serves" -> 7, "emb_band_keys" -> 6,
       "hybrid_lex_rank" -> 6, "sampled_truth_serves" -> 6,
       "shared_gram_pairs" -> 4, "bpe_merge_table" -> 4,
       "doc_tokens" -> 4, "curation_sur" -> 3, "pq_codes_sampled" -> 3,
       "pq_codes_trained" -> 3, "minhash_pair_cache" -> 2,
       "knn_graph" -> 2, "doc_bigrams" -> 2, "pca_model" -> 1))
-    assert(counts.values.sum == 138)
-    assert(registry.count(_.needs.nonEmpty) == 83)
+    assert(counts.values.sum == 136)
+    assert(registry.count(_.needs.nonEmpty) == 81)
     assert(builds.keySet == buildConsumers.keySet)
     assert(counts.values.forall(_ > 0))
   }

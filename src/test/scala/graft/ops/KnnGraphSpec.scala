@@ -49,4 +49,16 @@ class KnnGraphSpec extends SparkSuite {
     val edges = Similarity.knnGraphFinal(spark, sf()).count()
     assert(edges <= n * 5, s"$edges edges for $n nodes")
   }
+
+  test("clear releases the storage of every graph stage") {
+    val sc = spark.sparkContext
+    RelationCache.clear(spark)
+    val before = sc.getPersistentRDDs.keySet
+    Similarity.knnGraphFinal(spark, sf()).count()
+    val built = sc.getPersistentRDDs.keySet -- before
+    assert(built.nonEmpty, "the graph stages hold storage while memoized")
+    RelationCache.clear(spark)
+    val left = sc.getPersistentRDDs.keySet intersect built
+    assert(left.isEmpty, s"RDDs ${left.toSeq.sorted} outlive RelationCache.clear")
+  }
 }

@@ -3,10 +3,10 @@ package graft.ops
 import graft.SparkSuite
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped memo lifecycle: one cache() per (session, key),
-  * deterministic release via clear, and the hot-gram guard count
-  * memoized per (posting relation, cap) so repeat cap invocations run
-  * zero extra jobs. */
+/** Session-scoped memo lifecycle: one build per (session, key), one
+  * kind per key, deterministic release via clear, and the hot-gram
+  * guard count memoized per (posting relation, cap) so repeat cap
+  * invocations run zero extra jobs. */
 class RelationCacheSpec extends SparkSuite {
   import spark.implicits._
 
@@ -41,10 +41,70 @@ class RelationCacheSpec extends SparkSuite {
     RelationCache.clear(spark)
   }
 
+  test("materialized checkpoints once per key and clear releases the checkpoint") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val a = RelationCache.materialized(spark, "rc_mat")(Seq(1, 2, 3).toDF("x"))
+    val b = RelationCache.materialized(spark, "rc_mat") {
+      fail("build must not run twice for a memoized key")
+    }
+    assert(a eq b)
+    val backing = sc.getPersistentRDDs.keySet -- before
+    assert(backing.nonEmpty, "localCheckpoint persists its backing RDD")
+    RelationCache.clear(spark)
+    assert((sc.getPersistentRDDs.keySet intersect backing).isEmpty,
+      "clear unpersists the checkpoint's backing RDD")
+  }
+
+  test("inside withTransparent, materialized neither reads nor writes the memo") {
+    RelationCache.clear(spark)
+    val raw = RelationCache.withTransparent {
+      RelationCache.materialized(spark, "rc_transparent")(Seq(1).toDF("x"))
+    }
+    assert(RelationCache.peek(spark, "rc_transparent").isEmpty, "no write")
+    assert(raw.queryExecution.logical.getClass.getSimpleName != "LogicalRDD",
+      "no checkpoint")
+    val held = RelationCache.materialized(spark, "rc_transparent") {
+      Seq(2).toDF("x")
+    }
+    val again = RelationCache.withTransparent {
+      RelationCache.materialized(spark, "rc_transparent")(Seq(3).toDF("x"))
+    }
+    assert(!(again eq held), "no read")
+    assert(again.as[Int].collect().toSeq == Seq(3))
+    RelationCache.clear(spark)
+  }
+
+  test("peek of a key never built is None and builds nothing") {
+    RelationCache.clear(spark)
+    assert(RelationCache.peek(spark, "rc_never").isEmpty)
+    assert(RelationCache.peek(spark, "rc_never").isEmpty)
+    var built = false
+    RelationCache.cached(spark, "rc_never") { built = true; Seq(1).toDF("x") }
+    assert(built, "peek left no entry behind")
+    RelationCache.clear(spark)
+  }
+
+  test("a key held under one kind is refused under another") {
+    RelationCache.cached(spark, "rc_kind")(Seq(1).toDF("x"))
+    val asMaterialized = intercept[IllegalStateException] {
+      RelationCache.materialized(spark, "rc_kind")(Seq(2).toDF("x"))
+    }
+    assert(asMaterialized.getMessage.contains("held as cached") &&
+      asMaterialized.getMessage.contains("asked for as materialized"),
+      asMaterialized.getMessage)
+    val asScalar = intercept[IllegalStateException] {
+      RelationCache.cachedScalar(spark, "rc_kind")("v")
+    }
+    assert(asScalar.getMessage.contains("asked for as cachedScalar"),
+      asScalar.getMessage)
+    RelationCache.clear(spark)
+  }
+
   test("capPostings runs the broadcast guard count once per (relation, cap)") {
     val posts = Seq.tabulate(40)(i => (i.toLong, 5L, s"g${i % 4}"))
       .toDF("doc_id", "ng", "gram")
-    TextOps.clearHotMemo(spark)
+    RelationCache.clear(spark)
     val before = TextOps.hotGuardCounts.get()
     val (cold1, hot1) = TextOps.capPostings(posts, 3)
     assert(TextOps.hotGuardCounts.get() == before + 1)
@@ -58,19 +118,19 @@ class RelationCacheSpec extends SparkSuite {
     TextOps.capPostings(posts, 5)
     assert(TextOps.hotGuardCounts.get() == before + 2)
     // clearing the memo forces a fresh count (regenerated-relation hook)
-    TextOps.clearHotMemo(spark)
+    RelationCache.clear(spark)
     TextOps.capPostings(posts, 3)
     assert(TextOps.hotGuardCounts.get() == before + 3)
-    TextOps.clearHotMemo(spark)
+    RelationCache.clear(spark)
   }
 
   test("capped results are identical across memoized re-invocations") {
     val posts = Seq.tabulate(60)(i => (i.toLong % 10, 6L, s"w${i % 6}"))
       .toDF("doc_id", "ng", "gram")
-    TextOps.clearHotMemo(spark)
+    RelationCache.clear(spark)
     val r1 = TextOps.capPostings(posts, 5)._1.collect().map(_.toSeq).toSet
     val r2 = TextOps.capPostings(posts, 5)._1.collect().map(_.toSeq).toSet
     assert(r1 == r2)
-    TextOps.clearHotMemo(spark)
+    RelationCache.clear(spark)
   }
 }
